@@ -10,15 +10,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import datagen
 
 
 def load_dims(spark: SparkSession) -> dict[str, DataFrame]:
+    # read with the declared schemas: an inferred one costs a Spark job per dim
     paths = datagen.ensure_dims()
     return {
-        "tools": spark.read.parquet(paths["tools"]),
-        "roles": spark.read.parquet(paths["roles"]),
+        name: spark.read.schema(from_arrow_schema(table().schema)).parquet(paths[name])
+        for name, table in (("tools", datagen.dim_tools_table), ("roles", datagen.dim_roles_table))
     }
 
 

@@ -451,9 +451,12 @@ def minhash_signatures(docs: DataFrame, impl: str = "arrow") -> DataFrame:
     (tests/test_dedup_golden.py), slower."""
     d = _widen(docs.select("doc_id", "text"))
     if impl == "native":
+        # NULL text → NULL shingles and sig, as the arrow kernel gives (the
+        # bare fold would see shingles [NULL] and return the all-P sentinel)
+        present = F.col("text").isNotNull()
         return (
-            d.withColumn("shingles", F.expr(SHINGLES_EXPR))
-            .withColumn("sig", F.expr(MINHASH_SIG_EXPR))
+            d.withColumn("shingles", F.when(present, F.expr(SHINGLES_EXPR)))
+            .withColumn("sig", F.when(present, F.expr(MINHASH_SIG_EXPR)))
             .drop("text")
         )
     return (
@@ -642,6 +645,9 @@ def _simhash_bands_from_xs(xs: pd.Series) -> pd.Series:
     weights = np.int64(1) << np.arange(16, dtype=np.int64)
     out = []
     for x in xs:
+        if x is None:  # NULL text: NULL bands, as the native fold gives
+            out.append(None)
+            continue
         a = np.asarray(x, dtype=np.int64)
         n = a.size
         if n == 0:

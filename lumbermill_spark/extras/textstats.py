@@ -129,6 +129,14 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _require_free(df: DataFrame, temps, op: str) -> None:
+    """Raise if ``df`` already has a column named like one of ``op``'s staged
+    temps: staging would overwrite it and the final drop would lose it."""
+    clash = sorted({c.lower() for c in df.columns} & {t.lower() for t in temps})
+    if clash:
+        raise ValueError(f"{op}: input column(s) {clash} clash with its temporary columns")
+
+
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality score ∈ [0,1]: alpha density, low punctuation, stopword
     presence, length — the standard cheap pre-filter for corpus curation."""
@@ -158,6 +166,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         "_q_stop": F.regexp_count(F.lower(t), F.lit(stopword_pat("en"))).cast("double"),
         "_q_ntok": ntok,
     }
+    _require_free(df, temps, "with_quality")
     df = df.withColumns(temps)
     alpha_ratio = F.col("_q_alpha")
     punct_ratio = F.col("_q_punct")
@@ -187,6 +196,7 @@ def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
     # tree — fine while codegen CSE holds, 4 regex scans × 4 re-evaluations
     # once the fused projection falls out of codegen. Same counts, same
     # precedence — values identical.
+    _require_free(df, ["_lc"], "with_langid")
     out = df.withColumn("_lc", F.lower(F.col(text_col)))
     for lang in LANG_ORDER:
         out = out.withColumn(

@@ -108,9 +108,9 @@ def _has_ledger_data(spark: SparkSession, out_dir: str) -> bool:
 
 def completed_files_df(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Distinct ``source_file`` of every *committed* chunk, as a DataFrame —
-    resume's set-difference then runs as a left-anti join ON THE CLUSTER, so
-    the completed-file set is never collected to the driver (round-2 verdict
-    #7: at 10^8 source files the driver set-difference is a memory bound).
+    resume streams it back sorted and merges it out of the input listing, so
+    the completed-file set is never collected to the driver at once (round-2
+    verdict #7: at 10^8 source files a driver-side set is a memory bound).
 
     The ``.done``-marker filter stays driver-side: marker count == chunk
     count, orders of magnitude smaller than the file count."""
@@ -125,13 +125,6 @@ def completed_files_df(spark: SparkSession, out_dir: str) -> DataFrame | None:
         .select("source_file")
         .distinct()
     )
-
-
-def completed_files(spark: SparkSession, out_dir: str) -> set[str]:
-    df = completed_files_df(spark, out_dir)
-    if df is None:
-        return set()
-    return {r["source_file"] for r in df.collect()}
 
 
 def cleanup_orphans(spark: SparkSession, out_dir: str) -> list[str]:

@@ -6,11 +6,15 @@ Shape of the plan (and why it scales):
   * classification + sentinel prefilters are native expressions evaluated
     BEFORE the parse UDF (drain.go's hand-rolled short-circuit, kept visible
     to Catalyst so column pruning / predicate pushdown reach the parquet scan);
+  * chunks come from the file index the input read already built (sorted,
+    paged out of the JVM), never from a scan of the rows; each chunk is read
+    with the input's schema, so the only schema-inference job is the first
+    read's;
   * ONE parse pass produces a wide ``p`` struct; the DataFrame is persisted
     once and the five sinks + metrics are filters/projections over it — the
     cache is the Spark analog of the reference's single fused loop. At real
-    cluster scale persist(DISK_ONLY/MEMORY_AND_DISK) bounds memory; the
-    alternative (5 re-scans with pushed-down class filters) is a config flag;
+    cluster scale persist(DISK_ONLY/MEMORY_AND_DISK) bounds memory. A noop
+    sink skips the cache and the fan-out: its one job is the summary;
   * fan-out writes go through the sinks.Sink seam: parquet appends
     partitioned by (chunk_id, md5 ``bucket``) — the consistent-hash ring
     analog (route.py) — or Iceberg's ``bucket(B, token)`` hidden
@@ -22,10 +26,14 @@ Shape of the plan (and why it scales):
 
 from __future__ import annotations
 
+import itertools
 import os
 import time
 import uuid
+from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,26 +67,6 @@ class PipelineConfig:
     # hash exchange be the only routing — used to isolate the shuffle's cost
     # in scaling measurements
     route_shuffle: bool = True
-    # 'cache': ONE parse pass persisted, sinks are filters over it (round-1
-    # design). 'rescan': no cache — each sink filters its class NATIVELY
-    # (pushed to the scan) and parses only those rows; total parse work is
-    # ~1.85x one pass (summary + per-class) but there is no 2M-row cache to
-    # build, serialize, and re-read. Which wins depends on text width vs
-    # class selectivity — both are measured in bench.py.
-    fanout_mode: str = "cache"  # 'cache' | 'rescan'
-    # shuffle each sink frame onto its bucket key right before the write:
-    # one file per (chunk, bucket) instead of one per (task, bucket) —
-    # measured 10,247 → ~100 files and 54 s → ~35 s at sf0.1/local[32].
-    # At 10^12 rows this is what keeps the table listable; the extra
-    # exchange is tiny vs the parse (sink rows are already filtered).
-    sink_repartition: bool = True
-    # submit the five independent sink-write jobs from concurrent threads:
-    # each is a small filtered projection over the shared cached parse pass,
-    # and serial submission leaves most executor slots idle between jobs
-    # (measured: the sink_writes phase is ~40% of the sf0.1 parquet run).
-    # Standard Spark multi-threaded action submission — also what overlaps
-    # straggler tails across output jobs on a real cluster.
-    concurrent_sink_writes: bool = True
     # which catalog-table (fs_managed=False) orphan chunks resume may DELETE:
     #   'owned' (default) — only chunk ids whose run_id this out_dir's ledger
     #     owns (begin/done markers), so a concurrent deployment sharing the
@@ -116,6 +104,60 @@ def _sink_dir(out_dir: str, sink: str) -> str:
     return os.path.join(out_dir, "sinks", sink)
 
 
+def _indexed_files(spark: SparkSession, src: DataFrame, page: int) -> Iterator[str]:
+    """The files of ``src``'s file index in the ``_metadata.file_path`` form,
+    sorted. The index is the one the read already built on the driver, so
+    listing costs no job and no row scan. The sorted list stays in the JVM;
+    Python holds one page of ``page`` paths at a time.
+
+    ``inputFiles()`` gives ``file:///x`` where the column gives ``file:/x``;
+    Hadoop's ``Path(f).toString()`` maps one to the other, run over the whole
+    array in one call. Its strings stay URI-encoded (a space is ``%20``), so
+    none holds a raw newline, which therefore separates them in the JVM-side
+    join and split."""
+    jvm = spark._jvm
+    paths = jvm.org.apache.hadoop.util.StringUtils.stringToPath(src._jdf.inputFiles())
+    joined = jvm.scala.collection.mutable.StringBuilder()
+    jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(paths).addString(joined, "\n")
+    files = (
+        jvm.java.util.regex.Pattern.compile("\n")
+        .splitAsStream(joined)
+        .sorted()
+        .collect(jvm.java.util.stream.Collectors.toList())
+    )
+    n = files.size()
+    for lo in range(0, n, page):
+        yield from jvm.java.lang.String.join("\n", files.subList(lo, min(lo + page, n))).split("\n")
+
+
+def _jvm_order(path: str) -> bytes:
+    # java.lang.String order (UTF-16 code units), the order _indexed_files
+    # sorts in; Python's own str order differs above U+FFFF
+    return path.encode("utf-16-be")
+
+
+def _without(files: Iterator[str], done: Iterator[str]) -> Iterator[str]:
+    """``files`` minus ``done``, both sorted by _jvm_order: a merge of two
+    streams, so neither side is ever held whole."""
+    done_keys = map(_jvm_order, done)
+    d = next(done_keys, None)
+    for f in files:
+        fk = _jvm_order(f)
+        while d is not None and d < fk:
+            d = next(done_keys, None)
+        if d != fk:
+            yield f
+
+
+_SINK_OF_CLASS = {
+    S.CLS_ROUTER: S.SINK_ROUTER,
+    S.CLS_ROUTER_ERROR: S.SINK_EVENTS_ROUTER,
+    S.CLS_DYNO_MEM: S.SINK_DYNO_MEM,
+    S.CLS_DYNO_LOAD: S.SINK_DYNO_LOAD,
+    S.CLS_DYNO_ERROR: S.SINK_EVENTS_DYNO,
+}
+
+
 # Sink writes go through the sinks.Sink seam (parquet | noop | iceberg).
 # Every write lands under a chunk_id=<id> partition — the exactly-once unit:
 # lineage.cleanup_orphans removes the whole partition if the chunk's .done
@@ -123,14 +165,92 @@ def _sink_dir(out_dir: str, sink: str) -> str:
 # leave duplicate rows for the retry to double.
 
 
-def build_parsed(df: DataFrame, cfg: PipelineConfig, spark: SparkSession, dims=None) -> DataFrame:
-    from . import classify as C
+def _fan_out(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    sink_writer: sink_mod.Sink,
+    pool: ThreadPoolExecutor,
+    parsed: DataFrame,
+    out_dir: str,
+    chunk_id: str,
+    chunk_counts: dict[str, int],
+) -> None:
+    """Write one chunk's five sinks (filtered projections over the cached
+    parse pass) and its metrics, submitting the independent jobs from
+    concurrent threads: each is small, and serial submission leaves most
+    executor slots idle between jobs (measured: the sink-write phase is ~40%
+    of the sf0.1 parquet run). Each metric job is CHAINED onto the one sink
+    write it depends on (error codes ← events_router, rollup ← router,
+    class_counts ← nothing), so metrics overlap the other sinks' writes
+    inside the same concurrent phase — one barrier total, and the caller's
+    lineage commit still lands strictly after every write."""
 
-    classified = C.classify(df)
-    if cfg.enrich:
-        dims = dims or enrich_mod.load_dims(spark)
-        classified = enrich_mod.enrich(classified, dims)
-    return P.with_parsed(classified, parser=cfg.parser)
+    def _write_sink(sink_name: str, builder) -> None:
+        # shuffle each sink frame onto its bucket key right before the write:
+        # one file per (chunk, bucket) instead of one per (task, bucket) —
+        # measured 10,247 → ~100 files and 54 s → ~35 s at sf0.1/local[32];
+        # the extra exchange is tiny next to the parse (sink rows are
+        # already filtered)
+        sdf = (
+            builder(parsed)
+            .withColumn("bucket", route.bucket_expr(F.col("token"), cfg.n_buckets))
+            .repartition(cfg.n_buckets, "bucket")
+        )
+        sink_writer.write(sdf, _sink_dir(out_dir, sink_name), chunk_id, "bucket")
+
+    # Metrics derive from what is ALREADY materialized — the way the
+    # reference's health checks and continuous queries read the written
+    # InfluxDB series, never the ingest stream:
+    #   * class_counts comes from the collected summary (a driver-side dict —
+    #     zero extra cluster jobs);
+    #   * error codes + rollup re-read the freshly written narrow sink chunk
+    #     (columnar, pre-filtered, ~KBs) instead of rescanning the wide parse
+    #     cache 3 more times. The read-back goes through the Sink seam:
+    #     read_chunk returns None when the chunk wrote zero rows for that sink
+    #     (an empty parquet append creates no chunk_id partition — a raw path
+    #     read would crash with PATH_NOT_FOUND) and it resolves catalog tables
+    #     for the Iceberg sink.
+    def _m_class_counts() -> None:
+        cdf = spark.createDataFrame(sorted(chunk_counts.items()), "counter string, n long")
+        sink_writer.write(
+            cdf.repartition(1),  # not coalesce: see lineage.commit_chunk
+            os.path.join(out_dir, "metrics", "class_counts"),
+            chunk_id,
+            None,
+        )
+
+    def _m_error_codes() -> None:
+        er_chunk = sink_writer.read_chunk(spark, _sink_dir(out_dir, S.SINK_EVENTS_ROUTER), chunk_id)
+        if er_chunk is not None:
+            sink_writer.write(
+                er_chunk.groupBy("code").agg(F.count("*").alias("n")).coalesce(1),
+                os.path.join(out_dir, "metrics", "router_error_codes"),
+                chunk_id,
+                None,
+            )
+
+    def _m_router_rollup() -> None:
+        router_chunk = sink_writer.read_chunk(spark, _sink_dir(out_dir, S.SINK_ROUTER), chunk_id)
+        if router_chunk is not None:
+            sink_writer.write(
+                agg.router_rollup(router_chunk).coalesce(4),
+                os.path.join(out_dir, "metrics", "router_rollup"),
+                chunk_id,
+                None,
+            )
+
+    metric_after = {S.SINK_EVENTS_ROUTER: _m_error_codes, S.SINK_ROUTER: _m_router_rollup}
+
+    def _sink_job(sink_name: str, builder) -> None:
+        _write_sink(sink_name, builder)
+        if cfg.write_metrics and sink_name in metric_after:
+            metric_after[sink_name]()
+
+    jobs = [(lambda n=name, b=builder: _sink_job(n, b)) for name, builder in P.SINK_BUILDERS.items()]
+    if cfg.write_metrics:
+        jobs.append(_m_class_counts)
+    for f in [pool.submit(j) for j in jobs]:
+        f.result()  # re-raise the first failure
 
 
 def run(
@@ -147,20 +267,20 @@ def run(
         raise ValueError(f"orphan_scope must be 'owned' or 'all', got {cfg.orphan_scope!r}")
     t0 = time.time()
     run_id = uuid.uuid4().hex[:12]
+    noop = cfg.sink_format == "noop"
     # 4x the shuffle-partition count for the salted routing repartition: the
     # cached fan-out is re-scanned by several downstream jobs, and finer
     # cache partitions smooth straggler waves (measured ~15% at local[32])
     nshuffle = cfg.repartition or 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    chunk_size = cfg.chunk_files or DEFAULT_CHUNK_FILES
 
-    # --- source file set (chunk + resume granularity)
-    # NB: must be the same representation the lineage ledger stores
-    # (_metadata.file_path), else resume's set-difference silently matches
-    # nothing and every chunk reprocesses
-    src_files = (
-        spark.read.parquet(input_path)
-        .select(F.col("_metadata.file_path").alias("source_file"))
-        .distinct()
-    )
+    # --- source file set (chunk + resume granularity). The read's one
+    # schema-inference job is the run's only one: every chunk reuses its
+    # schema. Paths are in the _metadata.file_path form the lineage ledger
+    # stores — any other form and resume's subtraction silently matches
+    # nothing, so every chunk reprocesses.
+    src = spark.read.parquet(input_path)
+    files = _indexed_files(spark, src, chunk_size)
     sink_writer = sink_mod.make_sink(spark, cfg.sink_format, cfg.n_buckets)
     if resume:
         # drop partial chunks BEFORE redoing — the exactly-once undo.
@@ -191,26 +311,11 @@ def run(
             print(f"[pipeline] resume: removed {len(orphans)} orphan chunk partition(s)")
         done_df = lin.completed_files_df(spark, out_dir)
         if done_df is not None:
-            # set-difference runs ON THE CLUSTER (left-anti join): the
-            # completed-file set is never collected to the driver, and only
-            # the remaining work comes back — at 10^8 source files the old
-            # driver-side set-difference was a driver-memory bound
-            src_files = src_files.join(done_df, "source_file", "left_anti")
-    chunk_size = cfg.chunk_files or DEFAULT_CHUNK_FILES
-
-    def _iter_chunks():
-        # the (anti-joined) file listing is PAGED off the cluster — sorted
-        # range-partitioned frame consumed partition-by-partition via
-        # toLocalIterator — so the driver holds at most one partition of
-        # paths plus the current chunk, never the full 10^8-file list
-        buf: list[str] = []
-        for r in src_files.orderBy("source_file").toLocalIterator():
-            buf.append(r["source_file"])
-            if len(buf) >= chunk_size:
-                yield buf
-                buf = []
-        if buf:
-            yield buf
+            # the committed files stream back from the cluster in the index's
+            # sort order and are merged out of the listing: at 10^8 source
+            # files neither set is ever held whole by the driver
+            done_files = done_df.orderBy(F.encode("source_file", "UTF-16BE")).toLocalIterator()
+            files = _without(files, (r["source_file"] for r in done_files))
 
     dims = enrich_mod.load_dims(spark) if cfg.enrich else None
     totals: dict[str, int] = {k: 0 for k in S.ALL_SINKS}
@@ -218,22 +323,12 @@ def run(
     rows_in = 0
     n_chunks = 0
     phases: dict[str, float] = {}
-    # ONE thread pool for the whole run (sink + metric job submission): a
+    # ONE thread pool for the whole run's sink + metric job submission: a
     # per-chunk pool would churn Python threads — and, under py4j's pinned
     # thread mode, matching JVM threads — once per chunk at 10^3-chunk scale
     pool = None
-    if cfg.concurrent_sink_writes:
-        from concurrent.futures import ThreadPoolExecutor
-
+    if not noop:
         pool = ThreadPoolExecutor(max_workers=len(P.SINK_BUILDERS), thread_name_prefix="lm-write")
-
-    def _run_jobs(jobs) -> None:
-        if pool is None:
-            for j in jobs:
-                j()
-        else:
-            for f in [pool.submit(j) for j in jobs]:
-                f.result()  # re-raise the first failure
 
     def _phase(name: str, t_start: float) -> float:
         now = time.time()
@@ -241,14 +336,8 @@ def run(
         return now
 
     try:
-        for ci, chunk in enumerate(_iter_chunks()):
-            if n_chunks == 0 and cfg.sink_format != "noop":
-                # claim the run BEFORE the first sink append: a crash between an
-                # append and the chunk's .done marker must leave a chunk id that
-                # a later resume recognizes as ours (lineage.owned_run_ids)
-                lin.register_run(spark, out_dir, run_id)
-            n_chunks = ci + 1
-            chunk_id = "%s_%04d" % (run_id, ci)
+        while chunk := list(itertools.islice(files, chunk_size)):
+            chunk_id = "%s_%04d" % (run_id, n_chunks)
             # source_file is consumed ONLY by the summary aggregation and the
             # lineage ledger — never by a sink — yet as a raw path string it is
             # the widest column on the routing shuffle (~90 B/row vs the ~50 B
@@ -258,7 +347,8 @@ def run(
             fid_map = F.create_map(
                 *[F.lit(x) for i, f in enumerate(chunk) for x in (f, i)]
             )
-            df = spark.read.parquet(*chunk).withColumn(
+            # the column form is URI-encoded; the reader wants the decoded path
+            df = spark.read.schema(src.schema).parquet(*[unquote(f) for f in chunk]).withColumn(
                 "file_id", fid_map[F.col("_metadata.file_path")].cast("int")
             )
             from . import classify as C
@@ -303,10 +393,8 @@ def run(
             parsed = parsed.drop("salt")
             # the cache exists for the fan-out (6 downstream consumers in parquet
             # mode); in noop mode the single fused aggregation is the only
-            # consumer, and in rescan mode each sink re-parses its own class —
-            # either way building the columnar cache would be pure overhead
-            materialize = cfg.sink_format != "noop" and cfg.fanout_mode == "cache"
-            if materialize:
+            # consumer, so building the columnar cache would be pure overhead
+            if not noop:
                 parsed = parsed.persist(cfg.storage_level)
             try:
                 tp = time.time()
@@ -324,15 +412,21 @@ def run(
                     .count()
                     .collect()
                 )
+                tp = _phase("summary", tp)
+                if not summary:
+                    # every file of the chunk has zero rows (Spark writes such
+                    # part files): a row scan never sees them, so they are no
+                    # chunk and get no ledger row
+                    continue
+                if n_chunks == 0 and not noop:
+                    # claim the run BEFORE the first sink append: a crash
+                    # between an append and the chunk's .done marker must leave
+                    # a chunk id that a later resume recognizes as ours
+                    # (lineage.owned_run_ids)
+                    lin.register_run(spark, out_dir, run_id)
+                n_chunks += 1
                 chunk_counts: dict[str, int] = {}
                 lineage_rows: dict[tuple[str, str], int] = {}
-                sink_of = {
-                    S.CLS_ROUTER: S.SINK_ROUTER,
-                    S.CLS_ROUTER_ERROR: S.SINK_EVENTS_ROUTER,
-                    S.CLS_DYNO_MEM: S.SINK_DYNO_MEM,
-                    S.CLS_DYNO_LOAD: S.SINK_DYNO_LOAD,
-                    S.CLS_DYNO_ERROR: S.SINK_EVENTS_DYNO,
-                }
                 for r in summary:
                     n, mc = r["count"], r["msg_class"]
                     chunk_counts[mc] = chunk_counts.get(mc, 0) + n
@@ -343,121 +437,29 @@ def run(
                         )
                     src_file = chunk[r["file_id"]]  # decode the dictionary id
                     lineage_rows[(src_file, mc)] = lineage_rows.get((src_file, mc), 0) + n
-                    sink = sink_of.get(mc)
+                    sink = _SINK_OF_CLASS.get(mc)
                     if sink and not r["perr"]:
                         if mc in (S.CLS_DYNO_MEM, S.CLS_DYNO_LOAD) and r["src_empty"]:
                             continue  # empty-source rows silently dropped (drain.go:201,232)
                         totals[sink] += n
-
-                tp = _phase("summary", tp)
-                # fan-out: 5 filtered projections over the cached parse pass
-                # (cache mode), or 5 class-filtered re-parses where the native
-                # msg_class predicate is pushed below the parse UDF (rescan
-                # mode). Each metric job is CHAINED onto the one sink write it
-                # actually depends on (error codes ← events_router, rollup ←
-                # router, class_counts ← nothing), so metrics overlap the
-                # other sinks' writes inside the same concurrent phase instead
-                # of waiting for a full barrier — one barrier total, and the
-                # lineage commit still lands strictly after every write.
-                cls_of_sink = {v: k for k, v in sink_of.items()}
-                write_metrics = cfg.write_metrics and cfg.sink_format != "noop"
-
-                def _write_sink(sink_name: str, builder) -> None:
-                    if cfg.fanout_mode == "rescan" and not materialize:
-                        src = P.with_parsed(
-                            classified.filter(F.col("msg_class") == cls_of_sink[sink_name]),
-                            parser=cfg.parser,
-                        )
-                    else:
-                        src = parsed
-                    sdf = builder(src).withColumn(
-                        "bucket", route.bucket_expr(F.col("token"), cfg.n_buckets)
-                    )
-                    if cfg.sink_repartition:
-                        sdf = sdf.repartition(cfg.n_buckets, "bucket")
-                    sink_writer.write(sdf, _sink_dir(out_dir, sink_name), chunk_id, "bucket")
-
-                # Metrics derive from what is ALREADY materialized — the way
-                # the reference's health checks and continuous queries read
-                # the written InfluxDB series, never the ingest stream:
-                #   * class_counts comes from the collected summary (a
-                #     driver-side dict — zero extra cluster jobs);
-                #   * error codes + rollup re-read the freshly written narrow
-                #     sink chunk (columnar, pre-filtered, ~KBs) instead of
-                #     rescanning the wide parse cache 3 more times. The
-                #     read-back goes through the Sink seam: read_chunk returns
-                #     None when the chunk wrote zero rows for that sink (an
-                #     empty parquet append creates no chunk_id partition — a
-                #     raw path read would crash with PATH_NOT_FOUND) and it
-                #     resolves catalog tables for the Iceberg sink.
-                def _m_class_counts() -> None:
-                    cdf = spark.createDataFrame(
-                        sorted(chunk_counts.items()), "counter string, n long"
-                    )
-                    sink_writer.write(
-                        cdf.repartition(1),  # not coalesce: see lineage.commit_chunk
-                        os.path.join(out_dir, "metrics", "class_counts"),
-                        chunk_id,
-                        None,
-                    )
-
-                def _m_error_codes() -> None:
-                    er_chunk = sink_writer.read_chunk(
-                        spark, _sink_dir(out_dir, S.SINK_EVENTS_ROUTER), chunk_id
-                    )
-                    if er_chunk is not None:
-                        sink_writer.write(
-                            er_chunk.groupBy("code").agg(F.count("*").alias("n")).coalesce(1),
-                            os.path.join(out_dir, "metrics", "router_error_codes"),
-                            chunk_id,
-                            None,
-                        )
-
-                def _m_router_rollup() -> None:
-                    router_chunk = sink_writer.read_chunk(
-                        spark, _sink_dir(out_dir, S.SINK_ROUTER), chunk_id
-                    )
-                    if router_chunk is not None:
-                        sink_writer.write(
-                            agg.router_rollup(router_chunk).coalesce(4),
-                            os.path.join(out_dir, "metrics", "router_rollup"),
-                            chunk_id,
-                            None,
-                        )
-
-                _metric_after = {
-                    S.SINK_EVENTS_ROUTER: _m_error_codes,
-                    S.SINK_ROUTER: _m_router_rollup,
-                }
-
-                def _sink_job(sink_name: str, builder) -> None:
-                    _write_sink(sink_name, builder)
-                    if write_metrics and sink_name in _metric_after:
-                        _metric_after[sink_name]()
-
-                jobs = [
-                    (lambda n=name, b=builder: _sink_job(n, b))
-                    for name, builder in P.SINK_BUILDERS.items()
-                ]
-                if write_metrics:
-                    jobs.append(_m_class_counts)
-                _run_jobs(jobs)
-
-                tp = _phase("fanout_writes", tp)
                 for k, v in chunk_counts.items():
                     cls_totals[k] = cls_totals.get(k, 0) + v
                 rows_in += chunk_counts.get("lines", 0)
+                # a noop sink discards its input: no fan-out plans, no ledger
+                if noop:
+                    continue
+                _fan_out(spark, cfg, sink_writer, pool, parsed, out_dir, chunk_id, chunk_counts)
+                tp = _phase("fanout_writes", tp)
                 # lineage ledger commit — AFTER sink writes succeeded (from the
                 # already-collected summary; no extra cluster job)
-                if cfg.sink_format != "noop":
-                    ldf = spark.createDataFrame(
-                        [(f, m, n) for (f, m), n in sorted(lineage_rows.items())],
-                        "source_file string, msg_class string, rows long",
-                    )
-                    lin.commit_chunk(spark, out_dir, run_id, chunk_id, ldf)
-                    tp = _phase("lineage", tp)
+                ldf = spark.createDataFrame(
+                    [(f, m, n) for (f, m), n in sorted(lineage_rows.items())],
+                    "source_file string, msg_class string, rows long",
+                )
+                lin.commit_chunk(spark, out_dir, run_id, chunk_id, ldf)
+                tp = _phase("lineage", tp)
             finally:
-                if materialize:
+                if not noop:
                     parsed.unpersist()
 
     finally:

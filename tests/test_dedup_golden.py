@@ -26,6 +26,7 @@ TEXTS = [
     "   ",  # whitespace only → zero tokens
     "repeat repeat repeat repeat",
     "unicode café naïve über",
+    None,  # NULL text → NULL signature in every impl
 ]
 
 
@@ -34,7 +35,9 @@ def _md5ab(s: str, b_digits: int) -> tuple[int, int]:
     return int(h[:15], 16), int(h[15 : 15 + b_digits], 16)
 
 
-def py_minhash_sig(text: str) -> list[int]:
+def py_minhash_sig(text: str | None) -> list[int] | None:
+    if text is None:
+        return None
     k, p = dedup.SHINGLE_K, dedup.MINHASH_P
     n = max(len(text) - k + 1, 1)
     shingles = {text[i : i + k] for i in range(n)}
@@ -45,7 +48,9 @@ def py_minhash_sig(text: str) -> list[int]:
     ]
 
 
-def py_simhash_bands(text: str) -> list[int]:
+def py_simhash_bands(text: str | None) -> list[int] | None:
+    if text is None:
+        return None
     toks = [t for t in __import__("re").split(r"[ \t\n\r]+", text) if t]
     acc = [0] * dedup.SIMHASH_BITS
     for t in toks:
@@ -70,7 +75,7 @@ def test_minhash_signatures_match_pure_python(spark):
 
     for impl in ("arrow", "native"):
         got = {
-            r["doc_id"]: list(r["sig"])
+            r["doc_id"]: r["sig"] and list(r["sig"])
             for r in dedup.minhash_signatures(_df(spark), impl=impl)
             .select("doc_id", "sig")
             .collect()
@@ -82,23 +87,23 @@ def test_minhash_signatures_match_pure_python(spark):
 def test_simhash_bands_match_pure_python(spark):
     for impl in ("arrow", "native"):
         got = {
-            r["doc_id"]: list(r["bands"])
+            r["doc_id"]: r["bands"] and list(r["bands"])
             for r in dedup.simhash_signatures(_df(spark), impl=impl).collect()
         }
         for i, t in enumerate(TEXTS):
             assert got[i] == py_simhash_bands(t), f"[{impl}] simhash bands mismatch for {t!r}"
-            assert all(0 <= b < (1 << 16) for b in got[i])
+            assert all(0 <= b < (1 << 16) for b in got[i] or [])
 
 
 def test_minhash_shingles_are_distinct_ordered_sets(spark):
     rows = dedup.minhash_signatures(_df(spark)).select("doc_id", "shingles").collect()
-    for r in rows:
-        sh = list(r["shingles"])
-        assert len(sh) == len(set(sh))
+    by_id = {r["doc_id"]: r["shingles"] and list(r["shingles"]) for r in rows}
+    for sh in by_id.values():
+        assert sh is None or len(sh) == len(set(sh))
     # len<k fallback: whole text is the single shingle
-    by_id = {r["doc_id"]: list(r["shingles"]) for r in rows}
     assert by_id[3] == ["ab"]
     assert by_id[4] == [""]
+    assert by_id[TEXTS.index(None)] is None
 
 
 def test_jaccard_expr_exact(spark):

@@ -120,6 +120,17 @@ def test_text_stats_basic(spark):
     assert 0.0 <= q[2] <= q[1] <= 1.0
 
 
+def test_text_stats_temp_column_clash_raises(spark):
+    """with_quality / with_langid stage temporaries (_q_*, _lc) and drop
+    them; an input column with one of those names would be overwritten and
+    then lost, so it raises instead (case-insensitive, like Spark)."""
+    df = spark.createDataFrame([(1, "the quick fox", 7)], ["doc_id", "text", "_q_alpha"])
+    with pytest.raises(ValueError, match="_q_alpha"):
+        textstats.with_quality(df)
+    with pytest.raises(ValueError, match="_lc"):
+        textstats.with_langid(df.withColumnRenamed("_q_alpha", "_LC"))
+
+
 def test_mm_stub_deterministic_and_md5(spark, docs):
     import hashlib
 

@@ -117,8 +117,8 @@ def test_resume_antijoin_many_files(spark, small_input, tmp_path):
 
 
 def test_paged_chunk_listing_many_files(spark, small_input, tmp_path):
-    """chunk_files=2 over 20 source files: the listing is consumed through
-    toLocalIterator (never a full driver collect), every chunk's file-id
+    """chunk_files=2 over 20 source files: the listing is paged out of the
+    input's file index (never a full driver collect), every chunk's file-id
     create_map stays at <= 2*chunk_files literals, and crash-resume is still
     exactly-once (round-3 verdict, next #6)."""
     src = str(tmp_path / "many_files")
@@ -142,6 +142,59 @@ def test_paged_chunk_listing_many_files(spark, small_input, tmp_path):
     res2 = pipeline.run(spark, src, out, cfg, resume=True)
     assert res2.chunks == 1
     assert spark.read.parquet(os.path.join(out, "sinks", "router")).count() == n1
+
+
+def test_index_listing_matches_file_path_column(spark, small_input, tmp_path):
+    """The file-index listing gives exactly the distinct _metadata.file_path
+    values, sorted and paged, on a directory whose name holds a space, '%',
+    '=' and non-ASCII text; the run reads those files back."""
+    from pyspark.sql import functions as F
+
+    src = str(tmp_path / "a b%41k=v ü")
+    spark.read.parquet(small_input).repartition(3).write.parquet(src)
+    df = spark.read.parquet(src)
+    column = sorted(
+        (r[0] for r in df.select(F.col("_metadata.file_path")).distinct().collect()),
+        key=pipeline._jvm_order,
+    )
+    assert len(column) == 3
+    assert list(pipeline._indexed_files(spark, df, 2)) == column
+    assert list(pipeline._indexed_files(spark, df, 1024)) == column
+    res = pipeline.run(spark, src, str(tmp_path / "out"), pipeline.PipelineConfig(sink_format="noop"))
+    assert res.chunks == 1 and res.rows_in == 4000
+
+
+def test_noop_run_submits_at_most_six_jobs(spark, small_input, tmp_path):
+    """A fresh single-chunk noop run: the input read's schema inference plus
+    the summary job's stages, and nothing that only lists or plans."""
+    sc = spark.sparkContext
+    sc.setJobGroup("noop_job_count", "noop pipeline.run")
+    try:
+        res = pipeline.run(
+            spark, small_input, str(tmp_path / "out"), pipeline.PipelineConfig(sink_format="noop")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.chunks == 1 and res.rows_in == 4000
+    assert len(sc.statusTracker().getJobIdsForGroup("noop_job_count")) <= 6
+
+
+def test_zero_row_file_is_no_chunk(spark, small_input, tmp_path):
+    """A zero-row part file sits in the file index but never counts as a
+    chunk, even as a chunk's only file, and never gets a ledger row."""
+    src = str(tmp_path / "with_empty")
+    df = spark.read.parquet(small_input)
+    df.repartition(1).write.parquet(src)
+    df.limit(0).write.mode("append").parquet(src)
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 2
+    out = str(tmp_path / "out")
+    cfg = pipeline.PipelineConfig(chunk_files=1, write_metrics=False)
+    res = pipeline.run(spark, src, out, cfg)
+    assert res.chunks == 1 and res.rows_in == 4000
+    led = spark.read.parquet(os.path.join(out, "lineage_ledger"))
+    assert led.select("source_file").distinct().count() == 1
+    res2 = pipeline.run(spark, src, out, cfg, resume=True)
+    assert res2.chunks == 0 and res2.rows_in == 0
 
 
 def test_default_chunk_cap(spark, small_input, tmp_path):
