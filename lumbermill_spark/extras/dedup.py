@@ -220,7 +220,7 @@ def ngram_jaccard_pairs(
     )
     if not materialize:
         return result  # lazy plan for inspection/tests; caller owns the caches
-    return _finalize(result, d)
+    return textstats._materialize(result, d)
 
 
 # ---------------------------------------------------------------------------
@@ -429,19 +429,6 @@ def _widen(docs: DataFrame) -> DataFrame:
     return docs.repartition(target, "doc_id")
 
 
-def _finalize(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Materialize a (small) pair/label result via eager localCheckpoint,
-    then release the signature caches backing it. Without this, every call
-    leaked its persisted signature frame for the life of the session
-    (round-3 advice): the checkpoint truncates lineage so the result no
-    longer references the caches, and its blocks are GC-managed
-    (ContextCleaner) rather than pinned in the cache manager forever."""
-    out = result.localCheckpoint(eager=True)
-    for c in cached:
-        c.unpersist()
-    return out
-
-
 def minhash_signatures(docs: DataFrame, impl: str = "arrow") -> DataFrame:
     """doc_id, shingles (distinct k-char shingles), sig (64 bigint minhashes).
 
@@ -574,7 +561,7 @@ def minhash_lsh_pairs(
     )
     if not materialize:
         return result  # lazy plan for inspection/tests; caller owns the caches
-    return _finalize(result, sigs)
+    return textstats._materialize(result, sigs)
 
 
 # ---------------------------------------------------------------------------
@@ -716,7 +703,7 @@ def simhash_pairs(
     )
     if not materialize:
         return result  # lazy plan for inspection/tests; caller owns the caches
-    return _finalize(result, sigs)
+    return textstats._materialize(result, sigs)
 
 
 # ---------------------------------------------------------------------------
@@ -836,7 +823,7 @@ def connected_components(nodes: DataFrame, pairs: DataFrame, max_iter: int = 20)
                     "rounds (label sum still decreasing) — the duplicate graph "
                     "has a component with diameter > max_iter; raise max_iter"
                 )
-        return _finalize(labels.select("doc_id", "cluster_id"))
+        return textstats._materialize(labels.select("doc_id", "cluster_id"))
     finally:
         edges.unpersist()
         if prev_persisted is not None:
@@ -1172,7 +1159,7 @@ def duplicate_spans(
     )
     if not materialize:
         return out  # lazy plan for inspection/tests; caller owns the cache
-    return _finalize(out, sh)
+    return textstats._materialize(out, sh)
 
 
 def remove_duplicate_spans(

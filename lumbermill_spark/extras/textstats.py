@@ -825,7 +825,7 @@ def unigram_logprob(
     # The count table is vocab-sized (small); persist it so totals and the
     # top-K don't each re-tokenize the corpus, then pin the two tiny derived
     # frames with an eager localCheckpoint and release the cache (the same
-    # hygiene as dedup._finalize). Net corpus cost: exactly two tokenization
+    # hygiene as _materialize). Net corpus cost: exactly two tokenization
     # passes — vocabulary build and scoring.
     counts = (
         toks.filter(F.col("tok").isNotNull())
@@ -954,10 +954,13 @@ SHUFFLE_SALT = "lmshuffle-v1"
 
 
 def _materialize(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Same hygiene as dedup._finalize: pin a (small) result via eager
-    localCheckpoint, then release the persisted intermediates backing it —
-    the checkpoint truncates lineage so the result no longer references the
-    caches and their blocks are GC-managed instead of leaking per call."""
+    """Pin a (small) result via eager localCheckpoint, then release the
+    persisted intermediates backing it (shared by dedup, sketch and this
+    module). Without this, every call leaked its persisted frames for the
+    life of the session (round-3 advice): the checkpoint truncates lineage
+    so the result no longer references the caches, and its blocks are
+    GC-managed (ContextCleaner) rather than pinned in the cache manager
+    forever."""
     out = result.localCheckpoint(eager=True)
     for c in cached:
         c.unpersist()

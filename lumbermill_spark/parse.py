@@ -424,9 +424,63 @@ def parse_fields_udf(cls_id: pa.Array, text: pa.Array) -> pa.Array:
 
 
 # ---------------------------------------------------------------------------
-# native-expression parser (pure Catalyst/codegen; used for benchmarking the
-# "stay JVM-side" alternative — same semantics, same shared regexes)
+# native-expression parsers (pure Catalyst/codegen; the "stay JVM-side"
+# alternatives — same semantics, same shared regexes). Every parser family
+# supplies only its per-field value Columns; ONE assembler, _assemble, turns
+# them into the ``p`` struct.
 # ---------------------------------------------------------------------------
+
+# the classes whose rows carry each extracted field; on every other row the
+# field holds its type's zero
+_FIELD_CLASSES = {
+    "status": (S.CLS_ROUTER,),
+    "service": (S.CLS_ROUTER,),
+    "error_code": (S.CLS_ROUTER_ERROR,),
+    "source": (S.CLS_DYNO_MEM, S.CLS_DYNO_LOAD),
+    **dict.fromkeys((*S.MEM_FLOAT_KEYS, *S.MEM_INT_KEYS), (S.CLS_DYNO_MEM,)),
+    **dict.fromkeys(S.LOAD_KEYS, (S.CLS_DYNO_LOAD,)),
+}
+_ZERO = {"int": 0, "double": 0.0, "string": ""}
+
+
+def _assemble(msg_class: Column, text: Column, values: dict[str, Column]) -> Column:
+    """The ``p`` struct, in schemas.PARSED_STRUCT's field order, from one
+    parser family's value Columns: ``values`` maps every extracted field to
+    its value and ``router_bad`` to the router's present-but-unparseable-int
+    flag. The rest is decided here, once for all families: the per-class
+    gating with the type's zero default, the int casts, dyno_ecode (the two
+    bytes after "Error R") and the parse_error drop rule."""
+
+    def is_cls(*classes: str) -> Column:
+        gate = msg_class == classes[0]
+        for c in classes[1:]:
+            gate = gate | (msg_class == c)
+        return gate
+
+    is_router, is_derr = is_cls(S.CLS_ROUTER), is_cls(S.CLS_DYNO_ERROR)
+    code2 = F.substring(text, len(S.SENTINEL_DYNO_ERROR) + 1, 2)
+    ecode_ok = code2.rlike(_RX_DYNO_ECODE)
+    logfmt_cls = is_cls(S.CLS_ROUTER, S.CLS_ROUTER_ERROR, S.CLS_DYNO_MEM, S.CLS_DYNO_LOAD)
+
+    fields = []
+    for f in S.PARSED_STRUCT.fields:
+        kind = f.dataType.simpleString()
+        if f.name == "parse_error":
+            col = (
+                (logfmt_cls & _odd_quotes_expr(text))
+                | (is_router & values["router_bad"])
+                | (is_derr & ~ecode_ok)
+            )
+        else:
+            if f.name == "dyno_ecode":
+                col = F.when(is_derr & ecode_ok, code2.cast("int"))
+            else:
+                col = F.when(is_cls(*_FIELD_CLASSES[f.name]), values[f.name])
+            col = col.otherwise(F.lit(_ZERO[kind]))
+            if kind == "int":
+                col = col.cast("int")
+        fields.append(col.alias(f.name))
+    return F.struct(*fields)
 
 
 def _adv(text: Column) -> Column:
@@ -477,13 +531,12 @@ def _decode_escapes_expr(c: Column) -> Column:
     return F.replace(c, F.lit(S.ESCAPE_SENTINEL), F.lit("\\"))
 
 
-def _nat_str1(text: Column, pat: str, unquote: bool) -> Column:
+def _nat_str1(text: Column, pat: str) -> Column:
     g1 = F.regexp_extract(text, pat, 1)
     g2 = F.regexp_extract(text, pat, 2)
     # only the QUOTED branch is escape-decoded (scanner.go unquotes qvalue
     # tokens only; bare values keep their bytes)
-    g1v = _decode_escapes_expr(g1) if unquote else g1
-    return F.when(g1 != "", g1v).otherwise(g2)
+    return F.when(g1 != "", _decode_escapes_expr(g1)).otherwise(g2)
 
 
 def _nat_float1(text: Column, pat: str) -> Column:
@@ -491,86 +544,30 @@ def _nat_float1(text: Column, pat: str) -> Column:
     return F.coalesce(F.when(raw != "", raw.cast("double")), F.lit(0.0))
 
 
-def _native_struct(msg_class: Column, text: Column, qa: bool) -> Column:
-    """The full parsed struct from ONE pattern family: quote-parity patterns
-    (qa=True — adversarial rows) or the plain fast patterns (qa=False — rows
-    with no unsafe quoted span, where the two families are provably equal).
-    The per-row family dispatch lives in the CALLER as a single top-level
-    CaseWhen: building each branch from one family keeps the generated code
-    per branch at half the size of the old per-key when(adv) weave and
-    evaluates the adversarial rlike exactly once per row — the old shape
-    cost native_fast +52% at sf0.1 (round-3 verdict, wrong #1)."""
-
-    def ipat(d_fast, d_qa, key):
-        return (d_qa if qa else d_fast)[key]
-
-    odd_quotes = _odd_quotes_expr(text)
-    is_router = msg_class == S.CLS_ROUTER
-
+def _native_struct(msg_class: Column, text: Column) -> Column:
+    """The full parsed struct from the quote-parity pattern family — the
+    adversarial-row branch of both native parsers. The per-row family
+    dispatch lives in the CALLER as a single top-level CaseWhen: building
+    each branch from one family keeps the generated code per branch at half
+    the size of the old per-key when(adv) weave and evaluates the
+    adversarial rlike exactly once per row — the old shape cost native_fast
+    +52% at sf0.1 (round-3 verdict, wrong #1)."""
     router_bad = F.lit(False)
-    ints = {}
+    values = {}
     for key in ("connect", "service", "status", "bytes"):
-        v, bad = _nat_int1(
-            text,
-            ipat(S.ROUTER_INT_KEYS, S.ROUTER_INT_KEYS_QA, key),
-            ipat(S.PAT_ROUTER_PRESENT, S.PAT_ROUTER_PRESENT_QA, key),
-        )
-        ints[key] = v
+        v, bad = _nat_int1(text, S.ROUTER_INT_KEYS_QA[key], S.PAT_ROUTER_PRESENT_QA[key])
+        values[key] = v
         router_bad = router_bad | bad
-
-    code2 = F.substring(text, len(S.SENTINEL_DYNO_ERROR) + 1, 2)
-    ecode_ok = code2.rlike(r"^(\d\d|[+-]\d)$")
-
-    is_mem = msg_class == S.CLS_DYNO_MEM
-    is_load = msg_class == S.CLS_DYNO_LOAD
-    is_rerr = msg_class == S.CLS_ROUTER_ERROR
-    is_derr = msg_class == S.CLS_DYNO_ERROR
-    logfmt_cls = is_router | is_rerr | is_mem | is_load
-
-    pat_code = S.PAT_CODE_QA if qa else S.PAT_CODE
-    pat_source = S.PAT_SOURCE_QA if qa else S.PAT_SOURCE
-
-    def memf(key):
-        return _nat_float1(text, ipat(S.MEM_FLOAT_KEYS, S.MEM_FLOAT_KEYS_QA, key))
-
-    def memi(key):
+    values["router_bad"] = router_bad
+    values["error_code"] = _nat_str1(text, S.PAT_CODE_QA)
+    values["source"] = _nat_str1(text, S.PAT_SOURCE_QA)
+    for key, pat in {**S.MEM_FLOAT_KEYS_QA, **S.LOAD_KEYS_QA}.items():
+        values[key] = _nat_float1(text, pat)
+    for key, pat in S.MEM_INT_KEYS_QA.items():
         # dyno_mem int errors are swallowed (dyno_msg.go:66-69): present-but-
         # bad never drops, so the presence probe is skipped entirely
-        return _nat_int1(text, ipat(S.MEM_INT_KEYS, S.MEM_INT_KEYS_QA, key), "x^")[0]
-
-    def loadf(key):
-        return _nat_float1(text, ipat(S.LOAD_KEYS, S.LOAD_KEYS_QA, key))
-
-    return F.struct(
-        F.when(is_router, ints["status"]).otherwise(F.lit(0)).cast("int").alias("status"),
-        F.when(is_router, ints["service"]).otherwise(F.lit(0)).cast("int").alias("service"),
-        F.when(is_rerr, _nat_str1(text, pat_code, unquote=qa)).otherwise(F.lit("")).alias("error_code"),
-        F.when(is_derr & ecode_ok, code2.cast("int")).otherwise(F.lit(0)).cast("int").alias("dyno_ecode"),
-        F.when(is_mem | is_load, _nat_str1(text, pat_source, unquote=qa)).otherwise(F.lit("")).alias("source"),
-        F.when(is_mem, memf("memory_cache")).otherwise(F.lit(0.0)).alias("memory_cache"),
-        F.when(is_mem, memi("memory_pgpgin")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgin"),
-        F.when(is_mem, memi("memory_pgpgout")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgout"),
-        F.when(is_mem, memf("memory_rss")).otherwise(F.lit(0.0)).alias("memory_rss"),
-        F.when(is_mem, memf("memory_swap")).otherwise(F.lit(0.0)).alias("memory_swap"),
-        F.when(is_mem, memf("memory_total")).otherwise(F.lit(0.0)).alias("memory_total"),
-        F.when(is_load, loadf("load_avg_1m")).otherwise(F.lit(0.0)).alias("load_avg_1m"),
-        F.when(is_load, loadf("load_avg_5m")).otherwise(F.lit(0.0)).alias("load_avg_5m"),
-        F.when(is_load, loadf("load_avg_15m")).otherwise(F.lit(0.0)).alias("load_avg_15m"),
-        (
-            (logfmt_cls & odd_quotes)
-            | (is_router & router_bad)
-            | (is_derr & ~ecode_ok)
-        ).alias("parse_error"),
-    )
-
-
-def parse_fields_native(msg_class: Column, text: Column) -> Column:
-    """ONE top-level dispatch: the adversarial rlike runs once per row and
-    selects a whole single-family struct (CaseWhen branches evaluate lazily,
-    so safe rows never touch the quote-parity patterns)."""
-    return F.when(_adv(text), _native_struct(msg_class, text, qa=True)).otherwise(
-        _native_struct(msg_class, text, qa=False)
-    )
+        values[key] = _nat_int1(text, pat, "x^")[0]
+    return _assemble(msg_class, text, values)
 
 
 def with_parsed_native(df: DataFrame) -> DataFrame:
@@ -608,7 +605,7 @@ def with_parsed_native(df: DataFrame) -> DataFrame:
         inter["_ng1_source"] = F.when(gate_src, F.regexp_extract(text, S.PAT_SOURCE, 1))
         inter["_ng2_source"] = F.when(gate_src, F.regexp_extract(text, S.PAT_SOURCE, 2))
 
-        qa = _native_struct(mc, text, qa=True)
+        qa = _native_struct(mc, text)
         p = F.when(_adv(text), qa).otherwise(_native_struct_from_cols(mc, text))
         return inter, p
 
@@ -618,31 +615,21 @@ def with_parsed_native(df: DataFrame) -> DataFrame:
 
 def _native_struct_from_cols(msg_class: Column, text: Column) -> Column:
     """The fast-family struct assembled from the `_ng*` attribute columns
-    laid down by with_parsed_native — value-identical to
-    _native_struct(qa=False) (same patterns, same casts, same drop/zero
-    policies), but every raw extraction is referenced as an attribute."""
-    odd_quotes = _odd_quotes_expr(text)
-    is_router = msg_class == S.CLS_ROUTER
-
+    laid down by with_parsed_native — the plain fast patterns, provably equal
+    to the quote-parity family on rows with no unsafe quoted span (same
+    casts, same drop/zero policies), but every raw extraction is referenced
+    as an attribute."""
     router_bad = F.lit(False)
-    ints = {}
+    values = {}
     for key in ("connect", "service", "status", "bytes"):
         raw = F.col("_ng_" + key)
         v = F.when(raw != "", raw.cast("int"))
         # isNull FIRST (same short-circuit as _nat_int1): the present-probe
         # regex only runs on rows whose extraction already failed
         bad = v.isNull() & text.rlike(S.PAT_ROUTER_PRESENT[key])
-        ints[key] = F.coalesce(v, F.lit(0))
+        values[key] = F.coalesce(v, F.lit(0))
         router_bad = router_bad | bad
-
-    code2 = F.substring(text, len(S.SENTINEL_DYNO_ERROR) + 1, 2)
-    ecode_ok = code2.rlike(r"^(\d\d|[+-]\d)$")
-
-    is_mem = msg_class == S.CLS_DYNO_MEM
-    is_load = msg_class == S.CLS_DYNO_LOAD
-    is_rerr = msg_class == S.CLS_ROUTER_ERROR
-    is_derr = msg_class == S.CLS_DYNO_ERROR
-    logfmt_cls = is_router | is_rerr | is_mem | is_load
+    values["router_bad"] = router_bad
 
     def ffloat(key):
         raw = F.col("_ng_" + key)
@@ -656,27 +643,13 @@ def _native_struct_from_cols(msg_class: Column, text: Column) -> Column:
         g1, g2 = F.col("_ng1_" + key), F.col("_ng2_" + key)
         return F.when(g1 != "", g1).otherwise(g2)
 
-    return F.struct(
-        F.when(is_router, ints["status"]).otherwise(F.lit(0)).cast("int").alias("status"),
-        F.when(is_router, ints["service"]).otherwise(F.lit(0)).cast("int").alias("service"),
-        F.when(is_rerr, fstr("code")).otherwise(F.lit("")).alias("error_code"),
-        F.when(is_derr & ecode_ok, code2.cast("int")).otherwise(F.lit(0)).cast("int").alias("dyno_ecode"),
-        F.when(is_mem | is_load, fstr("source")).otherwise(F.lit("")).alias("source"),
-        F.when(is_mem, ffloat("memory_cache")).otherwise(F.lit(0.0)).alias("memory_cache"),
-        F.when(is_mem, fint_swallow("memory_pgpgin")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgin"),
-        F.when(is_mem, fint_swallow("memory_pgpgout")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgout"),
-        F.when(is_mem, ffloat("memory_rss")).otherwise(F.lit(0.0)).alias("memory_rss"),
-        F.when(is_mem, ffloat("memory_swap")).otherwise(F.lit(0.0)).alias("memory_swap"),
-        F.when(is_mem, ffloat("memory_total")).otherwise(F.lit(0.0)).alias("memory_total"),
-        F.when(is_load, ffloat("load_avg_1m")).otherwise(F.lit(0.0)).alias("load_avg_1m"),
-        F.when(is_load, ffloat("load_avg_5m")).otherwise(F.lit(0.0)).alias("load_avg_5m"),
-        F.when(is_load, ffloat("load_avg_15m")).otherwise(F.lit(0.0)).alias("load_avg_15m"),
-        (
-            (logfmt_cls & odd_quotes)
-            | (is_router & router_bad)
-            | (is_derr & ~ecode_ok)
-        ).alias("parse_error"),
-    )
+    values["error_code"] = fstr("code")
+    values["source"] = fstr("source")
+    for key in (*S.MEM_FLOAT_KEYS, *S.LOAD_KEYS):
+        values[key] = ffloat(key)
+    for key in S.MEM_INT_KEYS:
+        values[key] = fint_swallow(key)
+    return _assemble(msg_class, text, values)
 
 
 # ---------------------------------------------------------------------------
@@ -686,18 +659,12 @@ def _native_struct_from_cols(msg_class: Column, text: Column) -> Column:
 # the ≤10-char EXTRACTED value does the same work in a fraction of the time.
 # Same semantics as the shared patterns on the engine's declared grammar
 # (space-separated pairs; suffix keys in canonical 'sample#<metric>' form);
-# pinned by tests/test_parse_golden.py + the hypothesis fuzz.
+# pinned by tests/test_parse_golden.py + the hypothesis fuzz. Its values
+# feed the same _assemble as the native parser's; adversarial rows take the
+# shared quote-parity struct (_native_struct).
 # ---------------------------------------------------------------------------
 
 _BIG = 1_000_000  # substring 'to end of string' length
-
-
-def _ff_val(pad: Column, key: str) -> tuple[Column, Column]:
-    """(kpos, raw space-terminated value after ' key='). kpos=0 → absent."""
-    needle = " " + key + "="
-    kpos = F.locate(needle, pad)
-    after = pad.substr(kpos + len(needle), F.lit(_BIG))
-    return kpos, F.substring_index(after, " ", 1)
 
 
 def _ff_strip(val: Column, unit: str) -> Column:
@@ -707,58 +674,6 @@ def _ff_strip(val: Column, unit: str) -> Column:
     return F.when(
         val.endswith(unit), val.substr(F.lit(1), F.length(val) - len(unit))
     ).otherwise(val)
-
-
-def _ff_int(pad: Column, key: str, unit: str = "") -> tuple[Column, Column]:
-    """(value-or-0, present-but-bad) with router semantics: presence = 'key='
-    or a bare valueless 'key' token; bad unless the value is a pure int
-    (after TrimSuffix(unit))."""
-    kpos, raw = _ff_val(pad, key)
-    stripped = _ff_strip(raw, unit)
-    ok = (kpos > 0) & stripped.rlike(r"^[+-]?\d+$")
-    v = F.when(ok, stripped.cast("int")).otherwise(F.lit(0))
-    # bad = present & ~ok, with present = (kpos>0) | bare. When the key= form
-    # exists, bare is irrelevant — so the bare probe (a full-line locate over
-    # a freshly concat'd copy) hides in the kpos==0 CaseWhen branch and runs
-    # only on rows actually missing 'key=' (~never on a canonical corpus).
-    # The probe alone was ~35% of the whole fast-struct cost when evaluated
-    # unconditionally (4 keys x full-line scan per router row).
-    bare = F.locate(" " + key + " ", F.concat(pad, F.lit(" "))) > 0
-    bad = F.when(kpos > 0, ~ok).otherwise(bare)
-    return v, bad
-
-
-def _ff_str(pad: Column, key: str) -> Column:
-    """Quoted-or-bare string value (pat_str semantics): '"([^"]*)"' needs a
-    CLOSING quote (unterminated → falls through to the bare alternative,
-    which stops at the quote → empty); bare stops at space or quote."""
-    needle = " " + key + "="
-    kpos = F.locate(needle, pad)
-    after = pad.substr(kpos + len(needle), F.lit(_BIG))
-    inner = after.substr(F.lit(2), F.lit(_BIG))
-    quoted = F.when(F.locate('"', inner) > 0, F.substring_index(inner, '"', 1)).otherwise(
-        F.lit("")
-    )
-    bare = F.substring_index(F.substring_index(after, " ", 1), '"', 1)
-    return F.when(kpos == 0, F.lit("")).otherwise(
-        F.when(after.startswith('"'), quoted).otherwise(bare)
-    )
-
-
-def _ff_float(pad: Column, key: str, unit: str = "") -> Column:
-    """Float-or-0.0 for canonical 'sample#<metric>' keys (errors swallowed,
-    dyno_msg.go semantics)."""
-    kpos, raw = _ff_val(pad, "sample#" + key)
-    stripped = _ff_strip(raw, unit)
-    ok = (kpos > 0) & stripped.rlike(r"^[+-]?(\d+\.?\d*|\.\d+)$")
-    return F.when(ok, stripped.cast("double")).otherwise(F.lit(0.0))
-
-
-def _ff_int_swallow(pad: Column, key: str, unit: str) -> Column:
-    kpos, raw = _ff_val(pad, "sample#" + key)
-    stripped = _ff_strip(raw, unit)
-    ok = (kpos > 0) & stripped.rlike(r"^[+-]?\d+$")
-    return F.when(ok, stripped.cast("int")).otherwise(F.lit(0))
 
 
 _FF_ROUTER_KEYS = (("connect", "ms"), ("service", "ms"), ("status", ""), ("bytes", ""))
@@ -828,7 +743,7 @@ def with_parsed_native_fast(df: DataFrame) -> DataFrame:
             inter["_kp_" + key] = F.when(gate, kpos)
             inter["_after_" + key] = F.when(gate, pad.substr(kpos + len(needle), F.lit(_BIG)))
 
-        qa = _native_struct(mc, text, qa=True)
+        qa = _native_struct(mc, text)
         p = F.when(_adv(text), qa).otherwise(_fast_struct_from_cols(mc, text))
         return inter, p
 
@@ -842,7 +757,10 @@ def with_parsed_native_fast(df: DataFrame) -> DataFrame:
 
 
 def _ff_str_from_cols(kp: Column, after: Column) -> Column:
-    """_ff_str over pre-extracted (kpos, tail-after-'key=') attribute columns."""
+    """Quoted-or-bare string value (pat_str semantics) over pre-extracted
+    (kpos, tail-after-'key=') attribute columns: '"([^"]*)"' needs a CLOSING
+    quote (unterminated → falls through to the bare alternative, which stops
+    at the quote → empty); bare stops at space or quote."""
     inner = after.substr(F.lit(2), F.lit(_BIG))
     quoted = F.when(F.locate('"', inner) > 0, F.substring_index(inner, '"', 1)).otherwise(
         F.lit("")
@@ -855,36 +773,33 @@ def _ff_str_from_cols(kp: Column, after: Column) -> Column:
 
 def _fast_struct_from_cols(msg_class: Column, text: Column) -> Column:
     """The fast-path struct assembled from the `inter` attribute columns laid
-    down by with_parsed_native_fast — identical semantics to
-    _native_fast_struct (pinned by the goldens + hypothesis fuzz), but every
-    re-referenced subexpression is an attribute, so CaseWhen's skipped
-    subexpression elimination no longer multiplies full-line scans."""
+    down by with_parsed_native_fast (semantics pinned by the goldens +
+    hypothesis fuzz): every re-referenced subexpression is an attribute, so
+    CaseWhen's skipped subexpression elimination no longer multiplies
+    full-line scans."""
     pad = F.col("_pad")
-    odd_quotes = _odd_quotes_expr(text)
-    is_router = msg_class == S.CLS_ROUTER
-
     router_bad = F.lit(False)
-    ints = {}
+    values = {}
     for key, unit in _FF_ROUTER_KEYS:
+        # router semantics: presence = 'key=' or a bare valueless 'key'
+        # token; bad unless the value is a pure int after TrimSuffix(unit)
         kp, raw = F.col("_kp_" + key), F.col("_rv_" + key)
         stripped = _ff_strip(raw, unit)
         ok = (kp > 0) & stripped.rlike(r"^[+-]?\d+$")
-        ints[key] = F.when(ok, stripped.cast("int")).otherwise(F.lit(0))
-        # the bare-token probe (full-line locate over a fresh concat) hides in
-        # the kpos==0 branch: it only runs on rows actually missing 'key='
+        values[key] = F.when(ok, stripped.cast("int")).otherwise(F.lit(0))
+        # bad = present & ~ok, with present = (kpos>0) | bare. When the key=
+        # form exists, bare is irrelevant — so the bare probe (a full-line
+        # locate over a freshly concat'd copy) hides in the kpos==0 CaseWhen
+        # branch and runs only on rows actually missing 'key=' (~never on a
+        # canonical corpus). The probe alone was ~35% of the whole
+        # fast-struct cost when evaluated unconditionally (4 keys x full-line
+        # scan per router row).
         bare = F.locate(" " + key + " ", F.concat(pad, F.lit(" "))) > 0
         router_bad = router_bad | F.when(kp > 0, ~ok).otherwise(bare)
-
-    code2 = F.substring(text, len(S.SENTINEL_DYNO_ERROR) + 1, 2)
-    ecode_ok = code2.rlike(r"^(\d\d|[+-]\d)$")
-
-    is_mem = msg_class == S.CLS_DYNO_MEM
-    is_load = msg_class == S.CLS_DYNO_LOAD
-    is_rerr = msg_class == S.CLS_ROUTER_ERROR
-    is_derr = msg_class == S.CLS_DYNO_ERROR
-    logfmt_cls = is_router | is_rerr | is_mem | is_load
+    values["router_bad"] = router_bad
 
     def ffloat(key: str, unit: str = "") -> Column:
+        # float-or-0.0, errors swallowed (dyno_msg.go semantics)
         kp, raw = F.col("_kp_" + key), F.col("_rv_" + key)
         stripped = _ff_strip(raw, unit)
         ok = (kp > 0) & stripped.rlike(r"^[+-]?(\d+\.?\d*|\.\d+)$")
@@ -896,83 +811,15 @@ def _fast_struct_from_cols(msg_class: Column, text: Column) -> Column:
         ok = (kp > 0) & stripped.rlike(r"^[+-]?\d+$")
         return F.when(ok, stripped.cast("int")).otherwise(F.lit(0))
 
-    code_str = _ff_str_from_cols(F.col("_kp_code"), F.col("_after_code"))
-    source_str = _ff_str_from_cols(F.col("_kp_source"), F.col("_after_source"))
-
-    return F.struct(
-        F.when(is_router, ints["status"]).otherwise(F.lit(0)).cast("int").alias("status"),
-        F.when(is_router, ints["service"]).otherwise(F.lit(0)).cast("int").alias("service"),
-        F.when(is_rerr, code_str).otherwise(F.lit("")).alias("error_code"),
-        F.when(is_derr & ecode_ok, code2.cast("int")).otherwise(F.lit(0)).cast("int").alias("dyno_ecode"),
-        F.when(is_mem | is_load, source_str).otherwise(F.lit("")).alias("source"),
-        F.when(is_mem, ffloat("memory_cache", "MB")).otherwise(F.lit(0.0)).alias("memory_cache"),
-        F.when(is_mem, fint_swallow("memory_pgpgin", "pages")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgin"),
-        F.when(is_mem, fint_swallow("memory_pgpgout", "pages")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgout"),
-        F.when(is_mem, ffloat("memory_rss", "MB")).otherwise(F.lit(0.0)).alias("memory_rss"),
-        F.when(is_mem, ffloat("memory_swap", "MB")).otherwise(F.lit(0.0)).alias("memory_swap"),
-        F.when(is_mem, ffloat("memory_total", "MB")).otherwise(F.lit(0.0)).alias("memory_total"),
-        F.when(is_load, ffloat("load_avg_1m")).otherwise(F.lit(0.0)).alias("load_avg_1m"),
-        F.when(is_load, ffloat("load_avg_5m")).otherwise(F.lit(0.0)).alias("load_avg_5m"),
-        F.when(is_load, ffloat("load_avg_15m")).otherwise(F.lit(0.0)).alias("load_avg_15m"),
-        (
-            (logfmt_cls & odd_quotes)
-            | (is_router & router_bad)
-            | (is_derr & ~ecode_ok)
-        ).alias("parse_error"),
-    )
-
-
-def parse_fields_native_fast(msg_class: Column, text: Column) -> Column:
-    """Column-level variant (tests / ad-hoc use): same semantics as
-    with_parsed_native_fast but as one expression — pays the conditional
-    re-evaluation cost described there; the pipeline path uses the
-    DataFrame-level form."""
-    fast = _native_fast_struct(msg_class, text)
-    return F.when(_adv(text), _native_struct(msg_class, text, qa=True)).otherwise(fast)
-
-
-def _native_fast_struct(msg_class: Column, text: Column) -> Column:
-    pad = F.concat(F.lit(" "), text)
-    odd_quotes = _odd_quotes_expr(text)
-    is_router = msg_class == S.CLS_ROUTER
-
-    router_bad = F.lit(False)
-    ints = {}
-    for key, unit in (("connect", "ms"), ("service", "ms"), ("status", ""), ("bytes", "")):
-        v, bad = _ff_int(pad, key, unit)
-        ints[key] = v
-        router_bad = router_bad | bad
-
-    code2 = F.substring(text, len(S.SENTINEL_DYNO_ERROR) + 1, 2)
-    ecode_ok = code2.rlike(r"^(\d\d|[+-]\d)$")
-
-    is_mem = msg_class == S.CLS_DYNO_MEM
-    is_load = msg_class == S.CLS_DYNO_LOAD
-    is_rerr = msg_class == S.CLS_ROUTER_ERROR
-    is_derr = msg_class == S.CLS_DYNO_ERROR
-    logfmt_cls = is_router | is_rerr | is_mem | is_load
-
-    return F.struct(
-        F.when(is_router, ints["status"]).otherwise(F.lit(0)).cast("int").alias("status"),
-        F.when(is_router, ints["service"]).otherwise(F.lit(0)).cast("int").alias("service"),
-        F.when(is_rerr, _ff_str(pad, "code")).otherwise(F.lit("")).alias("error_code"),
-        F.when(is_derr & ecode_ok, code2.cast("int")).otherwise(F.lit(0)).cast("int").alias("dyno_ecode"),
-        F.when(is_mem | is_load, _ff_str(pad, "source")).otherwise(F.lit("")).alias("source"),
-        F.when(is_mem, _ff_float(pad, "memory_cache", "MB")).otherwise(F.lit(0.0)).alias("memory_cache"),
-        F.when(is_mem, _ff_int_swallow(pad, "memory_pgpgin", "pages")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgin"),
-        F.when(is_mem, _ff_int_swallow(pad, "memory_pgpgout", "pages")).otherwise(F.lit(0)).cast("int").alias("memory_pgpgout"),
-        F.when(is_mem, _ff_float(pad, "memory_rss", "MB")).otherwise(F.lit(0.0)).alias("memory_rss"),
-        F.when(is_mem, _ff_float(pad, "memory_swap", "MB")).otherwise(F.lit(0.0)).alias("memory_swap"),
-        F.when(is_mem, _ff_float(pad, "memory_total", "MB")).otherwise(F.lit(0.0)).alias("memory_total"),
-        F.when(is_load, _ff_float(pad, "load_avg_1m")).otherwise(F.lit(0.0)).alias("load_avg_1m"),
-        F.when(is_load, _ff_float(pad, "load_avg_5m")).otherwise(F.lit(0.0)).alias("load_avg_5m"),
-        F.when(is_load, _ff_float(pad, "load_avg_15m")).otherwise(F.lit(0.0)).alias("load_avg_15m"),
-        (
-            (logfmt_cls & odd_quotes)
-            | (is_router & router_bad)
-            | (is_derr & ~ecode_ok)
-        ).alias("parse_error"),
-    )
+    values["error_code"] = _ff_str_from_cols(F.col("_kp_code"), F.col("_after_code"))
+    values["source"] = _ff_str_from_cols(F.col("_kp_source"), F.col("_after_source"))
+    for key in _FF_MEM_FLOATS:
+        values[key] = ffloat(key, "MB")
+    for key in _FF_MEM_INTS:
+        values[key] = fint_swallow(key, "pages")
+    for key in _FF_LOAD_KEYS:
+        values[key] = ffloat(key)
+    return _assemble(msg_class, text, values)
 
 
 # The UDF IS deterministic; the marker is an optimizer fence. Without it,

@@ -50,7 +50,7 @@ from . import sinks as sink_mod
 
 @dataclass
 class PipelineConfig:
-    parser: str = "pandas"  # 'pandas' (north_star default) | 'native'
+    parser: str = "pandas"  # 'pandas' (north_star default) | 'native' | 'native_fast'
     sink_format: str = "parquet"  # 'parquet' | 'noop' | 'iceberg' (sinks.py)
     n_buckets: int = 16
     n_salts: int = 8

@@ -5,6 +5,7 @@ drain.go's exact branch logic (SURVEY §5 layers 1+3+4)."""
 import pytest
 
 from lumbermill_spark import classify, oracle, parse
+from lumbermill_spark import schemas as S
 from tests.conftest import make_transcripts_df
 from tests.fixtures import tiny_rows
 
@@ -15,7 +16,7 @@ def _spark_outputs(spark, parser):
     sinks = {name: sorted(tuple(r) for r in b(parsed).collect()) for name, b in parse.SINK_BUILDERS.items()}
     counts = {r["msg_class"]: r["count"] for r in parsed.groupBy("msg_class").count().collect()}
     counts["logfmt_parse_error"] = parsed.filter("p.parse_error").count()
-    return sinks, counts
+    return sinks, counts, parsed.schema["p"].dataType
 
 
 def _oracle_outputs():
@@ -29,7 +30,7 @@ def _oracle_outputs():
 
 @pytest.mark.parametrize("parser", ["pandas", "native", "native_fast"])
 def test_sinks_match_oracle(spark, parser):
-    got_sinks, got_counts = _spark_outputs(spark, parser)
+    got_sinks, got_counts, p_type = _spark_outputs(spark, parser)
     exp_sinks, exp_counters = _oracle_outputs()
     for name in exp_sinks:
         assert got_sinks[name] == exp_sinks[name], f"sink {name} mismatch ({parser})"
@@ -38,6 +39,10 @@ def test_sinks_match_oracle(spark, parser):
                 "dyno_load", "unknown_heroku", "unknown_user", "token_missing"):
         assert got_counts.get(cls, 0) == exp_counters.get(cls, 0), f"count {cls} ({parser})"
     assert got_counts["logfmt_parse_error"] == exp_counters.get("logfmt_parse_error", 0)
+    # values compare 1 == 1.0, so pin the struct's field names and types too
+    # (nullability ignored)
+    got_fields = [(f.name, f.dataType) for f in p_type.fields]
+    assert got_fields == [(f.name, f.dataType) for f in S.PARSED_STRUCT.fields], parser
 
 
 @pytest.mark.parametrize("parser", ["pandas", "native"])

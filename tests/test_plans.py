@@ -2,6 +2,7 @@
 scale must not silently regress (broadcast joins stay broadcast, exactly one
 Python/Arrow exchange per sink, dimension scans pruned)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from lumbermill_spark import classify, datagen, enrich, parse
@@ -30,9 +31,10 @@ def test_single_arrow_exchange_per_sink(spark):
     assert plan.count("ArrowEvalPython") == 1, "parse must be ONE vectorized UDF pass"
 
 
-def test_native_parser_has_no_python(spark):
+@pytest.mark.parametrize("parser", ["native", "native_fast"])
+def test_native_parser_has_no_python(spark, parser):
     df = spark.read.parquet(datagen.ensure_transcripts(0.001))
-    parsed = parse.with_parsed(classify.classify(df), "native")
+    parsed = parse.with_parsed(classify.classify(df), parser)
     plan = _plan(parse.sink_router(parsed))
     assert "Python" not in plan
     assert "*(" in plan  # whole-stage-codegen'd spans
