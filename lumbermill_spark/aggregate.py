@@ -23,9 +23,10 @@ automatically — no hand-rolled combiners.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import parse as P
 from . import schemas as S
 
 
@@ -56,29 +57,10 @@ def class_counts(classified: DataFrame, parsed: DataFrame | None = None) -> Data
     )
 
 
-def sink_counts(parsed: DataFrame) -> dict[str, int]:
-    """All five sink row counts in ONE aggregation pass over the cached
-    parse (replaces five separate count jobs — map-side partial agg makes
-    this a single cheap scan)."""
-    perr = F.col("p.parse_error")
-    src = F.col("p.source")
-    conds = {
-        S.SINK_ROUTER: (F.col("msg_class") == S.CLS_ROUTER) & ~perr,
-        S.SINK_EVENTS_ROUTER: (F.col("msg_class") == S.CLS_ROUTER_ERROR) & ~perr,
-        S.SINK_DYNO_MEM: (F.col("msg_class") == S.CLS_DYNO_MEM) & ~perr & (src != ""),
-        S.SINK_DYNO_LOAD: (F.col("msg_class") == S.CLS_DYNO_LOAD) & ~perr & (src != ""),
-        S.SINK_EVENTS_DYNO: (F.col("msg_class") == S.CLS_DYNO_ERROR) & ~perr,
-    }
-    row = parsed.agg(
-        *[F.sum(F.when(c, 1).otherwise(0)).alias(k) for k, c in conds.items()]
-    ).collect()[0]
-    return {k: int(row[k] or 0) for k in conds}
-
-
 def router_error_code_counts(parsed: DataFrame) -> DataFrame:
     """drain.go:147 — per H-code counts, post-successful-parse only."""
     return (
-        parsed.filter((F.col("msg_class") == S.CLS_ROUTER_ERROR) & ~F.col("p.parse_error"))
+        parsed.filter(P.sink_keep(S.SINK_EVENTS_ROUTER))
         .groupBy(F.col("p.error_code").alias("code"))
         .agg(F.count("*").alias("n"))
     )
@@ -187,22 +169,6 @@ def top_tokens(router_sink: DataFrame, k: int = 10) -> DataFrame:
 DELIVERY_WINDOW_US = 1_000_000  # the poster's 1 s flush tick (poster.go:53)
 
 
-def sink_label_expr() -> Column:
-    """The delivery's sink series as a when-chain over the parsed frame (NOT
-    a 5-way union, which would re-run the fenced parse UDF per branch);
-    NULL for rows no sink keeps (drops, empty sources, unparsed classes)."""
-    perr = F.col("p.parse_error")
-    src = F.col("p.source")
-    mc = F.col("msg_class")
-    return (
-        F.when((mc == S.CLS_ROUTER) & ~perr, S.SINK_ROUTER)
-        .when((mc == S.CLS_ROUTER_ERROR) & ~perr, S.SINK_EVENTS_ROUTER)
-        .when((mc == S.CLS_DYNO_MEM) & ~perr & (src != ""), S.SINK_DYNO_MEM)
-        .when((mc == S.CLS_DYNO_LOAD) & ~perr & (src != ""), S.SINK_DYNO_LOAD)
-        .when((mc == S.CLS_DYNO_ERROR) & ~perr, S.SINK_EVENTS_DYNO)
-    )
-
-
 def delivery_log(parsed: DataFrame) -> DataFrame:
     """One row per DELIVERY — (sink, token, 1-second event-time bucket) with
     its point count — the deterministic batch replay of 'drain ≤1 s of
@@ -210,7 +176,7 @@ def delivery_log(parsed: DataFrame) -> DataFrame:
     <seriesName>.<token>, points.go:42-44). Shared by the batch rollup and
     the streaming twin (streaming.start_delivery_log_stream)."""
     return (
-        parsed.select(sink_label_expr().alias("sink"), "token", "time")
+        parsed.select(P.sink_label().alias("sink"), "token", "time")
         .filter(F.col("sink").isNotNull())
         .withColumn(
             "window_start_us",

@@ -73,3 +73,21 @@ def classify(df: DataFrame) -> DataFrame:
         .withColumn("msg_class", msg_class_expr(F.col("role"), F.col("tool"), F.col("text"), F.col("token")))
         .withColumn("time", F.unix_micros(F.col("ts").cast("timestamp")))
     )
+
+
+def encode_class(msg_class: Column) -> Column:
+    """msg_class → its ``S.CLS_ID`` tinyint code (NULL for any other value):
+    the class as 1 byte wherever it crosses a byte-counted boundary (the
+    routing shuffle, the Arrow transfer into the parse UDF)."""
+    code = F.lit(None).cast("tinyint")
+    for c, i in S.CLS_ID.items():
+        code = F.when(msg_class == c, i).otherwise(code)
+    return code
+
+
+def decode_class(code: Column) -> Column:
+    """The inverse of encode_class."""
+    msg_class = F.lit(None).cast("string")
+    for c, i in S.CLS_ID.items():
+        msg_class = F.when(code == i, c).otherwise(msg_class)
+    return msg_class

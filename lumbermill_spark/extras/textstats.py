@@ -449,12 +449,6 @@ REP_MAX_DUP_2GRAM_FRAC = 0.10
 REP_MAX_TOP_WORD_FRAC = 0.12
 
 
-def _rep_words(text: Column) -> Column:
-    return F.when(F.trim(text) == "", F.array().cast("array<string>")).otherwise(
-        F.slice(F.split(F.trim(text), r"\s+"), 1, MAX_REP_TOKENS)
-    )
-
-
 # Java-regex \s is the 6 ASCII whitespace chars (no Unicode classes without
 # the flag); the explicit class below makes Python's re split byte-identical
 # to Spark's split(trim(text), '\\s+') — incl. the leading/trailing EMPTY

@@ -33,11 +33,6 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def is_dir(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs_path(spark, path)
-    return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
-
-
 def list_names(spark: SparkSession, path: str) -> list[str]:
     """Child basenames of a directory; [] when the path is absent."""
     fs, p = _fs_path(spark, path)

@@ -47,6 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf, pandas_udf
 
+from . import classify as C
 from . import schemas as S
 
 # ---------------------------------------------------------------------------
@@ -857,11 +858,8 @@ def with_parsed(df: DataFrame, parser: str = "pandas") -> DataFrame:
             # classes the parser never reads (~14% of rows): the class strings
             # and the unread text would otherwise cross the Arrow JVM→Python
             # boundary as real bytes; nulls are a validity bit
-            cid = F.lit(None).cast("tinyint")
-            for c, i in S.CLS_ID.items():
-                cid = F.when(F.col("msg_class") == c, i).otherwise(cid)
             gated = F.when(F.col("msg_class").isin(S.PARSED_CLASSES), F.col("text"))
-            return (_parse_fields_once(cid, gated),)
+            return (_parse_fields_once(C.encode_class(F.col("msg_class")), gated),)
 
         (p,) = _cached_exprs("pandas", build_pandas)
     elif parser == "native":
@@ -877,6 +875,39 @@ def with_parsed(df: DataFrame, parser: str = "pandas") -> DataFrame:
 # sink projections (points.go:16-25 column order; token carried as a column)
 # ---------------------------------------------------------------------------
 
+# drain.go:96-274 decides a line's destination in one class switch; each sink
+# takes the rows of one class
+_SINK_CLASS = {
+    S.SINK_ROUTER: S.CLS_ROUTER,
+    S.SINK_EVENTS_ROUTER: S.CLS_ROUTER_ERROR,
+    S.SINK_DYNO_MEM: S.CLS_DYNO_MEM,
+    S.SINK_DYNO_LOAD: S.CLS_DYNO_LOAD,
+    S.SINK_EVENTS_DYNO: S.CLS_DYNO_ERROR,
+}
+
+
+def sink_keep(sink: str) -> Column:
+    """The one keep-rule of ``sink`` over a parsed frame: its class and no
+    parse error; the dyno sample series also silently drop a point with an
+    empty source (drain.go:201,232). The builders, the delivery log and the
+    pipeline's sink row counts all decide with it."""
+    keep = (F.col("msg_class") == _SINK_CLASS[sink]) & ~F.col("p.parse_error")
+    if sink in (S.SINK_DYNO_MEM, S.SINK_DYNO_LOAD):
+        keep = keep & (F.col("p.source") != "")
+    return keep
+
+
+def sink_label() -> Column:
+    """The sink a parsed row lands in, as a when-chain of the keep-rules in
+    ``S.ALL_SINKS`` order (NOT a 5-way union, which would re-run the fenced
+    parse UDF per branch); NULL for rows no sink keeps (drops, empty
+    sources, unparsed classes)."""
+    first, *rest = S.ALL_SINKS
+    label = F.when(sink_keep(first), first)
+    for sink in rest:
+        label = label.when(sink_keep(sink), sink)
+    return label
+
 
 def _dyno_type(c: Column) -> Column:
     # dynoType(): split on '.' take head (drain.go:49-54)
@@ -885,7 +916,7 @@ def _dyno_type(c: Column) -> Column:
 
 def sink_router(parsed: DataFrame) -> DataFrame:
     """drain.go:161-170: kept rows only (any bad int drops the row)."""
-    return parsed.filter((F.col("msg_class") == S.CLS_ROUTER) & ~F.col("p.parse_error")).select(
+    return parsed.filter(sink_keep(S.SINK_ROUTER)).select(
         F.col("token"),
         F.col("time"),
         F.col("p.status").alias("status"),
@@ -895,16 +926,14 @@ def sink_router(parsed: DataFrame) -> DataFrame:
 
 def sink_events_router(parsed: DataFrame) -> DataFrame:
     """drain.go:137-153."""
-    return parsed.filter((F.col("msg_class") == S.CLS_ROUTER_ERROR) & ~F.col("p.parse_error")).select(
+    return parsed.filter(sink_keep(S.SINK_EVENTS_ROUTER)).select(
         F.col("token"), F.col("time"), F.col("p.error_code").alias("code")
     )
 
 
 def sink_dyno_mem(parsed: DataFrame) -> DataFrame:
     """drain.go:191-219; empty source silently dropped (drain.go:201)."""
-    return parsed.filter(
-        (F.col("msg_class") == S.CLS_DYNO_MEM) & ~F.col("p.parse_error") & (F.col("p.source") != "")
-    ).select(
+    return parsed.filter(sink_keep(S.SINK_DYNO_MEM)).select(
         F.col("token"),
         F.col("time"),
         F.col("p.source").alias("source"),
@@ -920,9 +949,7 @@ def sink_dyno_mem(parsed: DataFrame) -> DataFrame:
 
 def sink_dyno_load(parsed: DataFrame) -> DataFrame:
     """drain.go:222-240; empty source silently dropped (drain.go:232)."""
-    return parsed.filter(
-        (F.col("msg_class") == S.CLS_DYNO_LOAD) & ~F.col("p.parse_error") & (F.col("p.source") != "")
-    ).select(
+    return parsed.filter(sink_keep(S.SINK_DYNO_LOAD)).select(
         F.col("token"),
         F.col("time"),
         F.col("p.source").alias("source"),
@@ -936,7 +963,7 @@ def sink_dyno_load(parsed: DataFrame) -> DataFrame:
 def sink_events_dyno(parsed: DataFrame) -> DataFrame:
     """drain.go:177-188: what=Procid, type literal "R", message = raw line
     (the per-turn text-equality contract rides on ``message``)."""
-    return parsed.filter((F.col("msg_class") == S.CLS_DYNO_ERROR) & ~F.col("p.parse_error")).select(
+    return parsed.filter(sink_keep(S.SINK_EVENTS_DYNO)).select(
         F.col("token"),
         F.col("time"),
         F.col("tool").alias("what"),

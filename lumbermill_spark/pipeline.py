@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from . import aggregate as agg
+from . import classify as C
 from . import enrich as enrich_mod
 from . import lineage as lin
 from . import parse as P
@@ -54,7 +55,6 @@ class PipelineConfig:
     sink_format: str = "parquet"  # 'parquet' | 'noop' | 'iceberg' (sinks.py)
     n_buckets: int = 16
     n_salts: int = 8
-    repartition: int | None = None  # defaults to spark.sql.shuffle.partitions
     enrich: bool = True
     write_metrics: bool = True
     # max source files per chunk. None → DEFAULT_CHUNK_FILES: an unchunked
@@ -78,7 +78,6 @@ class PipelineConfig:
     #     the table): use once to migrate such a deployment, ONLY when no
     #     other deployment shares the namespace.
     orphan_scope: str = "owned"
-    storage_level: StorageLevel = field(default_factory=lambda: StorageLevel.MEMORY_AND_DISK)
 
 
 # create_map carries 2 literals per file; 1024 files/chunk keeps the
@@ -147,15 +146,6 @@ def _without(files: Iterator[str], done: Iterator[str]) -> Iterator[str]:
             d = next(done_keys, None)
         if d != fk:
             yield f
-
-
-_SINK_OF_CLASS = {
-    S.CLS_ROUTER: S.SINK_ROUTER,
-    S.CLS_ROUTER_ERROR: S.SINK_EVENTS_ROUTER,
-    S.CLS_DYNO_MEM: S.SINK_DYNO_MEM,
-    S.CLS_DYNO_LOAD: S.SINK_DYNO_LOAD,
-    S.CLS_DYNO_ERROR: S.SINK_EVENTS_DYNO,
-}
 
 
 # Sink writes go through the sinks.Sink seam (parquet | noop | iceberg).
@@ -271,7 +261,7 @@ def run(
     # 4x the shuffle-partition count for the salted routing repartition: the
     # cached fan-out is re-scanned by several downstream jobs, and finer
     # cache partitions smooth straggler waves (measured ~15% at local[32])
-    nshuffle = cfg.repartition or 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    nshuffle = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
     chunk_size = cfg.chunk_files or DEFAULT_CHUNK_FILES
 
     # --- source file set (chunk + resume granularity). The read's one
@@ -351,8 +341,6 @@ def run(
             df = spark.read.schema(src.schema).parquet(*[unquote(f) for f in chunk]).withColumn(
                 "file_id", fid_map[F.col("_metadata.file_path")].cast("int")
             )
-            from . import classify as C
-
             classified = C.classify(df)
             if cfg.enrich:
                 classified = enrich_mod.enrich(classified, dims)
@@ -382,20 +370,15 @@ def run(
                 # exchange and decode with a when-chain above it — Catalyst's
                 # column pruning keeps the decode on the reduce side, so the
                 # shuffle carries 1 byte instead of offset+string per row
-                enc = F.lit(None).cast("tinyint")
-                dec = F.lit(None).cast("string")
-                for i, c in enumerate(S.ALL_CLASSES):
-                    enc = F.when(F.col("msg_class") == c, i).otherwise(enc)
-                    dec = F.when(F.col("cls_id") == i, c).otherwise(dec)
-                parsed = parsed.withColumn("cls_id", enc).drop("msg_class")
+                parsed = parsed.withColumn("cls_id", C.encode_class(F.col("msg_class"))).drop("msg_class")
                 parsed = route.salted_repartition(parsed, nshuffle, salt=F.col("salt"))
-                parsed = parsed.withColumn("msg_class", dec).drop("cls_id")
+                parsed = parsed.withColumn("msg_class", C.decode_class(F.col("cls_id"))).drop("cls_id")
             parsed = parsed.drop("salt")
             # the cache exists for the fan-out (6 downstream consumers in parquet
             # mode); in noop mode the single fused aggregation is the only
             # consumer, so building the columnar cache would be pure overhead
             if not noop:
-                parsed = parsed.persist(cfg.storage_level)
+                parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
             try:
                 tp = time.time()
                 # ONE grouped aggregation materializes the cache and yields the
@@ -407,7 +390,7 @@ def run(
                         "file_id",
                         "msg_class",
                         F.col("p.parse_error").alias("perr"),
-                        (F.col("p.source") == "").alias("src_empty"),
+                        P.sink_label().alias("sink"),
                     )
                     .count()
                     .collect()
@@ -437,11 +420,8 @@ def run(
                         )
                     src_file = chunk[r["file_id"]]  # decode the dictionary id
                     lineage_rows[(src_file, mc)] = lineage_rows.get((src_file, mc), 0) + n
-                    sink = _SINK_OF_CLASS.get(mc)
-                    if sink and not r["perr"]:
-                        if mc in (S.CLS_DYNO_MEM, S.CLS_DYNO_LOAD) and r["src_empty"]:
-                            continue  # empty-source rows silently dropped (drain.go:201,232)
-                        totals[sink] += n
+                    if r["sink"]:
+                        totals[r["sink"]] += n
                 for k, v in chunk_counts.items():
                     cls_totals[k] = cls_totals.get(k, 0) + v
                 rows_in += chunk_counts.get("lines", 0)

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import bisect
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -39,14 +38,6 @@ def fnv1a_32(data: bytes) -> int:
     for b in data:
         h = ((h ^ b) * FNV32_PRIME) & 0xFFFFFFFF
     return h
-
-
-def fnv1a_32_batch(strings: "np.ndarray") -> "np.ndarray":
-    """Vectorized FNV-1a over an object array of strings (for parity tests)."""
-    out = np.empty(len(strings), dtype=np.uint32)
-    for i, s in enumerate(strings):
-        out[i] = fnv1a_32(s.encode("utf-8"))
-    return out
 
 
 class HashRing:

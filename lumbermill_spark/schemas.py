@@ -369,22 +369,3 @@ SINK_DYNO_MEM = "dyno_mem"
 SINK_DYNO_LOAD = "dyno_load"
 SINK_EVENTS_DYNO = "events_dyno"
 ALL_SINKS = [SINK_ROUTER, SINK_EVENTS_ROUTER, SINK_DYNO_MEM, SINK_DYNO_LOAD, SINK_EVENTS_DYNO]
-
-SINK_COLUMNS = {
-    SINK_ROUTER: ["token", "time", "status", "service"],
-    SINK_EVENTS_ROUTER: ["token", "time", "code"],
-    SINK_DYNO_MEM: [
-        "token",
-        "time",
-        "source",
-        "memory_cache",
-        "memory_pgpgin",
-        "memory_pgpgout",
-        "memory_rss",
-        "memory_swap",
-        "memory_total",
-        "dyno_type",
-    ],
-    SINK_DYNO_LOAD: ["token", "time", "source", "load_avg_1m", "load_avg_5m", "load_avg_15m", "dyno_type"],
-    SINK_EVENTS_DYNO: ["token", "time", "what", "type", "code", "message", "dyno_type"],
-}

@@ -48,15 +48,3 @@ def sessionize(transcripts: DataFrame, gap_seconds: int = SESSION_GAP_SECONDS) -
         F.max("ts_us").alias("end_us"),
     )
 
-
-def session_stats(sessions: DataFrame) -> DataFrame:
-    """Distribution of sessions per conversation and turns per session."""
-    per_conv = sessions.groupBy("conv_id").agg(
-        F.count("*").alias("n_sessions"), F.sum("n_turns").alias("n_turns")
-    )
-    return per_conv.agg(
-        F.count("*").alias("n_convs"),
-        F.sum("n_sessions").alias("n_sessions"),
-        F.round(F.avg("n_sessions"), 6).alias("avg_sessions_per_conv"),
-        F.max("n_sessions").alias("max_sessions_per_conv"),
-    )

@@ -3,9 +3,13 @@
 The reference is a streaming daemon: HTTP batches arrive continuously and
 posters flush micro-batches every 1 s (poster.go:53-82). The Spark-native
 equivalent is a file-source readStream over the transcripts directory with a
-1-second processing-time trigger and a foreachBatch sink that reuses the
-EXACT batch dataflow (classify → parse → fan-out) — one code path for both
-modes. Tests use trigger(availableNow) for deterministic drain-and-stop.
+1-second processing-time trigger and a foreachBatch sink. Each micro-batch
+shares classify, parse and the sink builders (parse.SINK_BUILDERS) with the
+batch pipeline, but not the rest of pipeline.run's body: it runs no enrich,
+no routing exchange, writes no ``bucket`` column and keeps no lineage ledger
+(a retried batch_id overwrites its own partitions instead), and it writes the
+five sinks one after another. Tests use trigger(availableNow) for
+deterministic drain-and-stop.
 
 Ordering/watermarks: the reference never enforces event-time order (whatever
 arrives is written with its parsed timestamp), so the base stream needs no
@@ -289,13 +293,11 @@ def start_delivery_log_stream(
     exactly once when the watermark finalizes it, through the append-mode
     parquet file sink. aggregate.delivery_size_rollup-style distributions
     are then a read-side aggregation over the log."""
-    from . import aggregate as agg
-
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
     cl = C.classify(stream).withWatermark("ts", watermark)
     parsed = P.with_parsed(cl, parser=parser)
     rows = parsed.select(
-        agg.sink_label_expr().alias("sink"), "token", "ts"
+        P.sink_label().alias("sink"), "token", "ts"
     ).filter(F.col("sink").isNotNull())
     log = rows.groupBy("sink", "token", F.window("ts", "1 second")).agg(
         F.count("*").alias("sz")
@@ -331,78 +333,6 @@ def windowed_rollup_stream(
         F.percentile_approx(
             F.regexp_extract("text", S.ROUTER_INT_KEYS["service"], 1).cast("int"), 0.5
         ).alias("p50_service"),
-    )
-
-
-def conv_running_stats_tws(
-    spark: SparkSession,
-    input_dir: str,
-    max_files_per_trigger: int = 2,
-):
-    """Spark-4 modernization twin of conv_running_stats_stream: identical
-    per-conversation running-stats semantics and output contract, expressed
-    on transformWithStateInPandas — named, typed ValueState on the RocksDB
-    state store instead of applyInPandasWithState's single opaque tuple.
-    The new API is where custom stateful operators are headed (state
-    variables, TTL, timers, initial state); keeping both twins pinned to the
-    same batch truth documents the migration path without breaking the
-    existing one.
-
-    Requires (a) the RocksDB state-store provider
-    (spark.sql.streaming.stateStore.providerClass =
-    ...state.RocksDBStateStoreProvider — bundled with Spark, no extra jar);
-    transformWithState does not run on the default HDFS-backed store — the
-    caller owns that session conf (see tests/test_streaming.py); and (b) the
-    `protobuf` Python package: PySpark's state-server protocol
-    (pyspark/sql/streaming/proto/StateMessage_pb2.py) imports
-    google.protobuf, which THIS no-network sandbox does not ship — so the
-    runtime path is verified by the protobuf-gated test only where the
-    dependency exists (same auto-activating pattern as the Iceberg jar
-    gate). The applyInPandasWithState twin above remains the executed,
-    batch-pinned implementation here.
-
-    Scale shape: unchanged from the applyInPandasWithState twin — state
-    partitioned by conv_id, one shuffle, no cross-key traffic; RocksDB
-    additionally spills state to local disk, which is exactly what a
-    100 TB keyed-state operator needs."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _ConvStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # last event time rides as exact epoch micros (bigint): state
-            # roundtrips through Arrow, and integer micros can't pick up a
-            # tz/ns quirk the way a timestamp-typed state column could
-            self._st = handle.getValueState("conv_state", "n long, max_idx int, last_us long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, max_idx, last_us = self._st.get() if self._st.exists() else (0, -1, 0)
-            for pdf in rows:
-                n += len(pdf)
-                max_idx = max(max_idx, int(pdf["turn_idx"].max()))
-                last_us = max(last_us, int(pdf["ts"].max().value // 1_000))
-            self._st.update((n, max_idx, last_us))
-            yield pd.DataFrame(
-                {
-                    "conv_id": [key[0]],
-                    "n_turns": [n],
-                    "max_turn_idx": [max_idx],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    return stream.groupBy("conv_id").transformWithStateInPandas(
-        statefulProcessor=_ConvStats(),
-        outputStructType="conv_id string, n_turns long, max_turn_idx int, last_ts timestamp",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

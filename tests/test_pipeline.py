@@ -5,8 +5,10 @@ import os
 
 import pytest
 
-from lumbermill_spark import pipeline
+from lumbermill_spark import classify, parse, pipeline
 from lumbermill_spark.datagen import ensure_transcripts
+from tests.conftest import make_transcripts_df
+from tests.fixtures import tiny_rows
 
 
 @pytest.fixture(scope="module")
@@ -16,6 +18,34 @@ def small_input(spark, tmp_path_factory):
         "overwrite"
     ).parquet(p)
     return p
+
+
+@pytest.fixture(scope="module")
+def tiny_input(spark, tmp_path_factory):
+    p = str(tmp_path_factory.mktemp("lm_tiny"))
+    make_transcripts_df(spark, tiny_rows()).write.mode("overwrite").parquet(p)
+    return p
+
+
+@pytest.mark.parametrize("sink_format", ["noop", "parquet"])
+@pytest.mark.parametrize("source", ["small_input", "tiny_input"])
+def test_sink_rows_match_builders(spark, request, source, sink_format, tmp_path):
+    """PipelineResult.sink_rows equals each sink builder's row count over the
+    same input, and for parquet the rows on disk. The tiny fixture holds the
+    edge rows the keep-rules drop: dyno samples without a source, and
+    router lines with a bad int or an unterminated quote."""
+    src = request.getfixturevalue(source)
+    out = str(tmp_path / "out")
+    res = pipeline.run(spark, src, out, pipeline.PipelineConfig(sink_format=sink_format, write_metrics=False))
+    parsed = parse.with_parsed(classify.classify(spark.read.parquet(src)))
+    want = {s: build(parsed).count() for s, build in parse.SINK_BUILDERS.items()}
+    assert res.sink_rows == want
+    if sink_format == "parquet":
+        assert {s: spark.read.parquet(os.path.join(out, "sinks", s)).count() for s in want} == want
+    if source == "tiny_input":
+        # the edge rows are there, and dropped
+        for cls in ("router", "dyno_mem", "dyno_load"):
+            assert res.class_counts[cls] > res.sink_rows[cls] > 0
 
 
 def test_run_and_resume(spark, small_input, tmp_path):

@@ -346,88 +346,6 @@ def test_dedup_ingest_stream_matches_batch(spark, tmp_path):
     assert spark.read.parquet(f"{out}/accepted").count() == n
 
 
-def _has_protobuf():
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's state-server protocol needs the protobuf "
-    "package (pyspark/sql/streaming/proto/StateMessage_pb2.py); not shipped "
-    "in this no-network sandbox — auto-activates where it exists, same "
-    "pattern as the Iceberg jar gate",
-)
-def test_conv_running_stats_tws_matches_batch(spark, stream_input, tmp_path):
-    """The transformWithStateInPandas twin must accumulate ValueState across
-    micro-batches (maxFilesPerTrigger=1 → 3 batches) and its final state
-    must equal both the batch ground truth and the applyInPandasWithState
-    twin's contract. Runs on the RocksDB state store (a transformWithState
-    requirement; bundled provider, no jar)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            streaming.conv_running_stats_tws(spark, stream_input, max_files_per_trigger=1)
-            .writeStream.format("memory")
-            .queryName("conv_stats_tws")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    updates = spark.sql("SELECT * FROM conv_stats_tws")
-    assert updates.count() > updates.select("conv_id").distinct().count()
-    final = {
-        r["conv_id"]: (r["n_turns"], r["max_turn_idx"], r["last_ts"])
-        for r in updates.withColumn(
-            "rk",
-            F.row_number().over(Window.partitionBy("conv_id").orderBy(F.col("n_turns").desc())),
-        )
-        .filter("rk = 1")
-        .collect()
-    }
-    want = {
-        r["conv_id"]: (r["n"], r["mi"], r["lt"])
-        for r in spark.read.parquet(stream_input)
-        .groupBy("conv_id")
-        .agg(F.count("*").alias("n"), F.max("turn_idx").alias("mi"), F.max("ts").alias("lt"))
-        .collect()
-    }
-    assert final == want
-
-
-def test_conv_running_stats_tws_plan_builds(spark, stream_input):
-    """Even without protobuf (which only the RUN needs), the
-    transformWithStateInPandas plan must construct: streaming flag set, the
-    same output schema as the applyInPandasWithState twin."""
-    df = streaming.conv_running_stats_tws(spark, stream_input)
-    assert df.isStreaming
-    assert [f.simpleString() for f in df.schema.fields] == [
-        "conv_id:string",
-        "n_turns:bigint",
-        "max_turn_idx:int",
-        "last_ts:timestamp",
-    ]
-
-
 def test_cms_stream_matches_batch(spark, stream_input, tmp_path):
     """Sketch mergeability end-to-end: the cell-wise sum of per-micro-batch
     CMS partials equals the batch-built sketch exactly (forced multi-batch
