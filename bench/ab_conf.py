@@ -1,8 +1,10 @@
 """Generic interleaved A/B of one runtime-settable SQL conf on the parse
 stage. Usage:
   taskset -c 0-31 python bench/ab_conf.py <conf> <valA,valB> [sf] [runs] [cores]
-Same interleaving discipline as ab_arrow_batch.py (one session, strict
-A/B/A/B so host drift hits both arms equally)."""
+One session, the conf flipped per run (runtime-settable), strict A/B/A/B
+interleaving so host drift hits both arms equally; medians + raws printed.
+The Arrow batch-size A/B, for example:
+  python bench/ab_conf.py spark.sql.execution.arrow.maxRecordsPerBatch 10000,20000"""
 
 from __future__ import annotations
 
@@ -34,8 +36,9 @@ def main() -> None:
         p = parse.with_parsed(df, "pandas").select("p.*")
         t0 = time.time()
         p.agg(
-            F.sum("status"), F.sum("service"), F.sum(F.length("source")),
-            F.sum("memory_rss"), F.sum(F.col("parse_error").cast("int")),
+            F.sum("status"), F.sum("service"), F.sum(F.length("error_code")),
+            F.sum(F.length("source")), F.sum("memory_rss"), F.sum("load_avg_1m"),
+            F.sum(F.col("parse_error").cast("int")),
         ).collect()
         return round(time.time() - t0, 3)
 

@@ -105,6 +105,17 @@ def sink_freshness(sink_df: DataFrame) -> DataFrame:
 STALE_TIMEOUT_MICROS = 24 * 60 * 1_000_000  # influxDbStaleTimeout, http.go:14
 
 
+def dyno_latest(dyno_load: DataFrame, dyno_mem: DataFrame) -> DataFrame:
+    """Latest point time per token per dyno series (load, mem): the
+    health check's freshness data (http.go:129-150), shared by
+    stale_tokens and the streaming twin (streaming.sink_freshness_stream)."""
+    u = (
+        dyno_load.select("token", "time").withColumn("series", F.lit("dyno_load"))
+        .unionByName(dyno_mem.select("token", "time").withColumn("series", F.lit("dyno_mem")))
+    )
+    return u.groupBy("token", "series").agg(F.max("time").alias("latest_time"))
+
+
 def stale_tokens(dyno_load: DataFrame, dyno_mem: DataFrame, as_of_micros: int | None = None) -> DataFrame:
     """The health check's staleness predicate (http.go:14 + checkRecentToken,
     http.go:129-155): per token per dyno series (load, mem), the latest point
@@ -113,17 +124,13 @@ def stale_tokens(dyno_load: DataFrame, dyno_mem: DataFrame, as_of_micros: int | 
 
     Scale shape: one union + one groupBy; the scalar as_of is a broadcast
     single-row cross join, never a driver round-trip in the plan."""
-    u = (
-        dyno_load.select("token", "time").withColumn("series", F.lit("dyno_load"))
-        .unionByName(dyno_mem.select("token", "time").withColumn("series", F.lit("dyno_mem")))
-    )
-    latest = u.groupBy("token", "series").agg(F.max("time").alias("latest_time"))
+    latest = dyno_latest(dyno_load, dyno_mem)
     if as_of_micros is not None:
         as_of = F.lit(as_of_micros)
         latest = latest.withColumn("as_of", as_of)
     else:
         latest = latest.crossJoin(
-            F.broadcast(u.agg(F.max("time").alias("as_of")))
+            F.broadcast(latest.agg(F.max("latest_time").alias("as_of")))
         )
     return latest.select(
         "token",

@@ -215,13 +215,29 @@ HLL_P = 8  # 2^8 = 256 registers
 HLL_REGISTERS = 1 << HLL_P
 
 
+def hll_registers(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """The filled registers (bucket int, reg int). Each token hashes to a
+    32-bit md5 prefix; the low HLL_P bits pick the register, and the
+    register keeps the maximum number of leading zeros (+1) of the
+    remaining 24 bits. Registers merge by per-bucket max, so partials built
+    per micro-batch fold to these exactly (streaming.start_hll_stream)."""
+    h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
+    d = _tokens(df, text_col).select(
+        (h % HLL_REGISTERS).cast("int").alias("bucket"),
+        F.shiftright(h, HLL_P).alias("rest"),
+    )
+    # leading zeros of the 24-bit remainder, +1; rest == 0 → 25
+    rank = F.when(F.col("rest") == 0, F.lit(32 - HLL_P + 1)).otherwise(
+        32 - HLL_P - F.floor(F.log2("rest")) # floor(log2) gives the top bit index
+    )
+    return d.groupBy("bucket").agg(F.max(rank).cast("int").alias("reg"))
+
+
 def hll_distinct(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-row report: (n_registers, estimate, exact_distinct, err_frac).
-    Each token hashes to a 32-bit md5 prefix; the low HLL_P bits pick the
-    register, and the register keeps the maximum number of leading zeros
-    (+1) of the remaining 24 bits. The raw estimate alpha*m^2 / sum(2^-reg)
-    applies the standard small-range linear-counting correction when
-    estimate <= 2.5m and empty registers exist.
+    """One-row report: (n_registers, estimate, exact_distinct, err_frac)
+    over hll_registers. The raw estimate alpha*m^2 / sum(2^-reg) applies
+    the standard small-range linear-counting correction when estimate <=
+    2.5m and empty registers exist.
 
     Cross-engine float discipline: the harmonic sum folds over registers in
     BUCKET ORDER (collect into an ordered array, then an in-order
@@ -230,16 +246,7 @@ def hll_distinct(df: DataFrame, text_col: str = "text") -> DataFrame:
     combined max per register (256 groups), then a single-row fold —
     corpus-size work is exactly one aggregate pass."""
     toks = _tokens(df, text_col)
-    h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
-    d = toks.select(
-        (h % HLL_REGISTERS).cast("int").alias("bucket"),
-        F.shiftright(h, HLL_P).alias("rest"),
-    )
-    # leading zeros of the 24-bit remainder, +1; rest == 0 → 25
-    rank = F.when(F.col("rest") == 0, F.lit(32 - HLL_P + 1)).otherwise(
-        32 - HLL_P - F.floor(F.log2("rest")) # floor(log2) gives the top bit index
-    )
-    regs = d.groupBy("bucket").agg(F.max(rank).cast("int").alias("reg"))
+    regs = hll_registers(df, text_col)
     # fold registers IN BUCKET ORDER; absent buckets contribute 2^-0 = 1
     full = (
         regs.select(F.struct("bucket", "reg").alias("s"))

@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import fsio, streaming
 from . import textstats
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -56,30 +57,15 @@ def start_dedup_ingest_stream(
         w = Window.partitionBy("fingerprint").orderBy("doc_id")
         batch_first = fp.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
         new = batch_first.join(index_fp, "fingerprint", "left_anti")
-        try:
-            seen = df.sparkSession.read.parquet(seen_dir).select("fingerprint")
+        if fsio.exists(spark, seen_dir):  # absent before the first batch
+            seen = spark.read.schema("fingerprint string").parquet(seen_dir)
             new = new.join(seen, "fingerprint", "left_anti")
-        except Exception:
-            pass  # first batch: no log yet
-        out = (
-            new.select("doc_id", "fingerprint", "lang")
-            .withColumn("batch_id", F.lit(batch_id))
-            .localCheckpoint(eager=True)  # pin before the two writes below
-        )
-        for path, cols in ((seen_dir, ["fingerprint", "batch_id"]), (acc_dir, out.columns)):
-            (
-                out.select(*cols)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+        # pin before the two writes below
+        out = new.select("doc_id", "fingerprint", "lang").localCheckpoint(eager=True)
+        streaming._write_batch(out.select("fingerprint"), batch_id, seen_dir)
+        streaming._write_batch(out, batch_id, acc_dir)
 
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir or os.path.join(out_dir, "_ckpt_dedup_ingest")
+    writer = stream.writeStream.foreachBatch(write_batch)
+    return streaming._start(
+        writer, out_dir, "_ckpt_dedup_ingest", checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-    else:
-        q = writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
-    return q

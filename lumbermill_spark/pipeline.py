@@ -103,6 +103,12 @@ def _sink_dir(out_dir: str, sink: str) -> str:
     return os.path.join(out_dir, "sinks", sink)
 
 
+# the chunk-partitioned metric tables _fan_out writes; resume's catalog
+# cleanup walks the same tuple
+METRIC_TABLES = ("class_counts", "router_error_codes", "router_rollup")
+_M_CLASS_COUNTS, _M_ERROR_CODES, _M_ROLLUP = METRIC_TABLES
+
+
 def _indexed_files(spark: SparkSession, src: DataFrame, page: int) -> Iterator[str]:
     """The files of ``src``'s file index in the ``_metadata.file_path`` form,
     sorted. The index is the one the read already built on the driver, so
@@ -200,34 +206,25 @@ def _fan_out(
     #     (an empty parquet append creates no chunk_id partition — a raw path
     #     read would crash with PATH_NOT_FOUND) and it resolves catalog tables
     #     for the Iceberg sink.
+    def _write_metric(metric: str, mdf: DataFrame) -> None:
+        sink_writer.write(mdf, os.path.join(out_dir, "metrics", metric), chunk_id, None)
+
     def _m_class_counts() -> None:
         cdf = spark.createDataFrame(sorted(chunk_counts.items()), "counter string, n long")
-        sink_writer.write(
-            cdf.repartition(1),  # not coalesce: see lineage.commit_chunk
-            os.path.join(out_dir, "metrics", "class_counts"),
-            chunk_id,
-            None,
-        )
+        # not coalesce: see lineage.commit_chunk
+        _write_metric(_M_CLASS_COUNTS, cdf.repartition(1))
 
     def _m_error_codes() -> None:
         er_chunk = sink_writer.read_chunk(spark, _sink_dir(out_dir, S.SINK_EVENTS_ROUTER), chunk_id)
         if er_chunk is not None:
-            sink_writer.write(
-                er_chunk.groupBy("code").agg(F.count("*").alias("n")).coalesce(1),
-                os.path.join(out_dir, "metrics", "router_error_codes"),
-                chunk_id,
-                None,
+            _write_metric(
+                _M_ERROR_CODES, er_chunk.groupBy("code").agg(F.count("*").alias("n")).coalesce(1)
             )
 
     def _m_router_rollup() -> None:
         router_chunk = sink_writer.read_chunk(spark, _sink_dir(out_dir, S.SINK_ROUTER), chunk_id)
         if router_chunk is not None:
-            sink_writer.write(
-                agg.router_rollup(router_chunk).coalesce(4),
-                os.path.join(out_dir, "metrics", "router_rollup"),
-                chunk_id,
-                None,
-            )
+            _write_metric(_M_ROLLUP, agg.router_rollup(router_chunk).coalesce(4))
 
     metric_after = {S.SINK_EVENTS_ROUTER: _m_error_codes, S.SINK_ROUTER: _m_router_rollup}
 
@@ -289,8 +286,7 @@ def run(
             done = lin.done_chunk_ids(spark, out_dir)
             owned = lin.owned_run_ids(spark, out_dir)
             for tbl_path in [_sink_dir(out_dir, s) for s in S.ALL_SINKS] + [
-                os.path.join(out_dir, "metrics", m)
-                for m in ("class_counts", "router_error_codes", "router_rollup")
+                os.path.join(out_dir, "metrics", m) for m in METRIC_TABLES
             ]:
                 for cid in sorted(sink_writer.list_chunk_ids(spark, tbl_path) - done):
                     if cfg.orphan_scope != "all" and cid.rsplit("_", 1)[0] not in owned:
@@ -345,7 +341,6 @@ def run(
             if cfg.enrich:
                 classified = enrich_mod.enrich(classified, dims)
             parsed = P.with_parsed(classified, parser=cfg.parser)
-            parsed = parsed.withColumn("bucket", route.bucket_expr(F.col("token"), cfg.n_buckets))
             # prune to exactly what the sinks/metrics/lineage consume before the
             # persist — at 10^12 rows the cache/shuffle footprint is the limiting
             # factor. After the parse, the raw text is only consumed by the
@@ -363,7 +358,7 @@ def run(
             # turn_idx is consumed by nothing downstream of the parse except the
             # salt lane — fold it into a 4-byte salt column and drop the rest
             parsed = parsed.withColumn("salt", route.salt_expr(F.col("turn_idx"), cfg.n_salts))
-            keep = ["token", "time", "tool", "text", "msg_class", "p", "bucket", "file_id", "salt"]
+            keep = ["token", "time", "tool", "text", "msg_class", "p", "file_id", "salt"]
             parsed = parsed.select(*[c for c in keep if c in parsed.columns])
             if cfg.route_shuffle:
                 # encode msg_class (avg ~11-char string) as a tinyint below the

@@ -4,12 +4,14 @@ The reference is a streaming daemon: HTTP batches arrive continuously and
 posters flush micro-batches every 1 s (poster.go:53-82). The Spark-native
 equivalent is a file-source readStream over the transcripts directory with a
 1-second processing-time trigger and a foreachBatch sink. Each micro-batch
-shares classify, parse and the sink builders (parse.SINK_BUILDERS) with the
-batch pipeline, but not the rest of pipeline.run's body: it runs no enrich,
-no routing exchange, writes no ``bucket`` column and keeps no lineage ledger
-(a retried batch_id overwrites its own partitions instead), and it writes the
-five sinks one after another. Tests use trigger(availableNow) for
-deterministic drain-and-stop.
+shares classify, parse, the sink builders (parse.SINK_BUILDERS) and the
+class counter (aggregate.class_counts) with the batch pipeline, but not the
+rest of pipeline.run's body: it runs no enrich, no routing exchange, writes
+no ``bucket`` column and keeps no lineage ledger (a retried batch_id
+overwrites its own partitions, see _write_batch), and it writes the five
+sinks one after another. The windowed rollup keeps the router sink's rows
+(parse.sink_keep). Tests use trigger(availableNow) for deterministic
+drain-and-stop.
 
 Ordering/watermarks: the reference never enforces event-time order (whatever
 arrives is written with its parsed timestamp), so the base stream needs no
@@ -23,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import aggregate as A
 from . import classify as C
 from . import parse as P
 from . import schemas as S
@@ -50,30 +53,33 @@ def _start(writer, out_dir: str, ckpt_name: str, checkpoint_dir: str | None,
     return writer.start()
 
 
-def _write_sinks_batch(batch_df: DataFrame, batch_id: int, out_dir: str, parser: str) -> None:
-    """One micro-batch: classify → parse → fan-out.
+def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write one micro-batch's frame under a batch_id partition of `path`.
 
-    Idempotent under micro-batch retry: every write is partitioned by
+    Idempotent under micro-batch retry: the write is partitioned by
     batch_id and uses dynamic-partition OVERWRITE, so when Spark re-invokes
     foreachBatch with the same batch_id after a failure, the retry replaces
     the partial partition instead of appending duplicates. Combined with the
     checkpointed file source this gives end-to-end exactly-once."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
+def _write_sinks_batch(batch_df: DataFrame, batch_id: int, out_dir: str, parser: str) -> None:
+    """One micro-batch: classify → parse → fan-out (five sinks + the batch
+    class counter)."""
     parsed = P.with_parsed(C.classify(batch_df), parser=parser).persist()
-
-    def write(df: DataFrame, path: str) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
     try:
         for sink, builder in P.SINK_BUILDERS.items():
-            write(builder(parsed), os.path.join(out_dir, "sinks", sink))
-        write(
-            parsed.groupBy("msg_class").count(),
+            _write_batch(builder(parsed), batch_id, os.path.join(out_dir, "sinks", sink))
+        _write_batch(
+            A.class_counts(parsed, parsed),
+            batch_id,
             os.path.join(out_dir, "metrics", "class_counts_stream"),
         )
     finally:
@@ -165,21 +171,7 @@ def sink_freshness_stream(
     per (token, series), the smallest possible streaming state."""
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
     parsed = P.with_parsed(C.classify(stream), parser=parser)
-    load = (
-        P.sink_dyno_load(parsed)
-        .select("token", "time")
-        .withColumn("series", F.lit("dyno_load"))
-    )
-    mem = (
-        P.sink_dyno_mem(parsed)
-        .select("token", "time")
-        .withColumn("series", F.lit("dyno_mem"))
-    )
-    return (
-        load.unionByName(mem)
-        .groupBy("token", "series")
-        .agg(F.max("time").alias("latest_time"))
-    )
+    return A.dyno_latest(P.sink_dyno_load(parsed), P.sink_dyno_mem(parsed))
 
 
 def start_freshness_stream(
@@ -203,17 +195,9 @@ def start_freshness_stream(
     at any scale (a table format would replace the log with MERGE)."""
     agg_df = sink_freshness_stream(spark, input_dir, parser, max_files_per_trigger)
     log_dir = os.path.join(out_dir, "metrics", "freshness_log")
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(log_dir)
-        )
-
-    writer = agg_df.writeStream.outputMode("update").foreachBatch(write_batch)
+    writer = agg_df.writeStream.outputMode("update").foreachBatch(
+        lambda df, bid: _write_batch(df, bid, log_dir)
+    )
     return _start(writer, out_dir, "_ckpt_freshness", checkpoint_dir, available_now, trigger_seconds)
 
 
@@ -324,15 +308,15 @@ def windowed_rollup_stream(
     max_files_per_trigger: int = 8,
 ) -> DataFrame:
     """Event-time windowed router-request rollup with late-data watermark —
-    the streaming analog of aggregate.router_rollup_windowed."""
+    the streaming analog of aggregate.router_rollup_windowed: its rows are
+    the router sink's (parse.sink_keep), so parse-error rows are not
+    counted."""
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
     cl = C.classify(stream).withWatermark("ts", watermark)
-    router = cl.filter((F.col("msg_class") == S.CLS_ROUTER))
+    router = P.with_parsed(cl).filter(P.sink_keep(S.SINK_ROUTER))
     return router.groupBy(F.window("ts", window)).agg(
         F.count("*").alias("n_requests"),
-        F.percentile_approx(
-            F.regexp_extract("text", S.ROUTER_INT_KEYS["service"], 1).cast("int"), 0.5
-        ).alias("p50_service"),
+        F.percentile_approx("p.service", 0.5).alias("p50_service"),
     )
 
 
@@ -358,17 +342,10 @@ def start_cms_stream(
 
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
 
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        (
-            sketch.cms_build(df, text_col="text")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(os.path.join(out_dir, "cms_cells"))
-        )
-
-    writer = stream.writeStream.foreachBatch(write_batch)
+    cells = os.path.join(out_dir, "cms_cells")
+    writer = stream.writeStream.foreachBatch(
+        lambda df, bid: _write_batch(sketch.cms_build(df, text_col="text"), bid, cells)
+    )
     return _start(writer, out_dir, "_cms_checkpoint", checkpoint_dir, available_now, trigger_seconds)
 
 
@@ -406,14 +383,7 @@ def start_bloom_stream(
         fps = df.filter(F.col("conv_id").isNotNull()).select(
             textstats.fingerprint(F.col("text")).alias("fingerprint")
         )
-        (
-            sketch.bloom_build(fps)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(os.path.join(out_dir, "bloom_bits"))
-        )
+        _write_batch(sketch.bloom_build(fps), batch_id, os.path.join(out_dir, "bloom_bits"))
 
     writer = stream.writeStream.foreachBatch(write_batch)
     return _start(
@@ -450,27 +420,10 @@ def start_hll_stream(
 
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
 
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        toks = sketch._tokens(df, "text")
-        h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
-        d = toks.select(
-            (h % sketch.HLL_REGISTERS).cast("int").alias("bucket"),
-            F.shiftright(h, sketch.HLL_P).alias("rest"),
-        )
-        rank = F.when(F.col("rest") == 0, F.lit(32 - sketch.HLL_P + 1)).otherwise(
-            32 - sketch.HLL_P - F.floor(F.log2("rest"))
-        )
-        (
-            d.groupBy("bucket")
-            .agg(F.max(rank).cast("int").alias("reg"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(os.path.join(out_dir, "hll_regs"))
-        )
-
-    writer = stream.writeStream.foreachBatch(write_batch)
+    regs = os.path.join(out_dir, "hll_regs")
+    writer = stream.writeStream.foreachBatch(
+        lambda df, bid: _write_batch(sketch.hll_registers(df, "text"), bid, regs)
+    )
     return _start(
         writer, out_dir, "_hll_checkpoint", checkpoint_dir, available_now, trigger_seconds
     )

@@ -42,6 +42,28 @@ def test_stream_equals_batch(spark, stream_input, tmp_path):
     assert spark.read.parquet(os.path.join(out, "sinks", "router")).count() == n_before
 
 
+def test_stream_class_counts_match_batch(spark, stream_input, tmp_path):
+    """The stream's class_counts_stream metric, summed per counter over
+    batch_id, equals the batch counter aggregate.class_counts, `lines` and
+    `logfmt_parse_error` included."""
+    from pyspark.sql import functions as F
+
+    from lumbermill_spark import aggregate
+
+    out = str(tmp_path / "out")
+    q = streaming.start_pipeline_stream(spark, stream_input, out, available_now=True)
+    q.awaitTermination(300)
+
+    log = spark.read.parquet(os.path.join(out, "metrics", "class_counts_stream"))
+    got = {
+        r["counter"]: r["n"]
+        for r in log.groupBy("counter").agg(F.sum("n").alias("n")).collect()
+    }
+    parsed = parse.with_parsed(classify.classify(spark.read.parquet(stream_input)))
+    want = {r["counter"]: r["n"] for r in aggregate.class_counts(parsed, parsed).collect()}
+    assert got == want and {"lines", "logfmt_parse_error"} <= set(got)
+
+
 def test_conv_running_stats_stateful(spark, stream_input, tmp_path):
     """applyInPandasWithState keyed state must accumulate ACROSS micro-batches
     (maxFilesPerTrigger=1 forces 3 batches over the 3-file input) and the
@@ -146,20 +168,20 @@ def test_windowed_rollup_stream_matches_batch(spark, stream_input, tmp_path):
         for r in spark.sql("SELECT * FROM win_rollup").collect()
     }
 
-    cl = classify.classify(spark.read.parquet(stream_input))
-    router = cl.filter(F.col("msg_class") == S.CLS_ROUTER)
+    parsed = parse.with_parsed(classify.classify(spark.read.parquet(stream_input)))
+    router = parsed.filter(parse.sink_keep(S.SINK_ROUTER))
     want = {
         (r["window"]["start"], r["window"]["end"]): (r["n_requests"], r["p50_service"])
         for r in router.groupBy(F.window("ts", "1 minute"))
         .agg(
             F.count("*").alias("n_requests"),
-            F.percentile_approx(
-                F.regexp_extract("text", S.ROUTER_INT_KEYS["service"], 1).cast("int"), 0.5
-            ).alias("p50_service"),
+            F.percentile_approx("p.service", 0.5).alias("p50_service"),
         )
         .collect()
     }
     assert got == want and len(got) > 0
+    # the stream counts exactly the router sink's rows
+    assert sum(n for n, _ in got.values()) == parse.sink_router(parsed).count()
 
 
 def test_freshness_file_stream_update_mode(spark, stream_input, tmp_path):
@@ -248,16 +270,14 @@ def test_windowed_rollup_file_stream_append_mode(spark, ordered_stream_input, tm
             os.path.join(out, "metrics", "router_rollup_windowed")
         ).collect()
     }
-    cl = classify.classify(spark.read.parquet(stream_input))
-    router = cl.filter(F.col("msg_class") == S.CLS_ROUTER)
+    parsed = parse.with_parsed(classify.classify(spark.read.parquet(stream_input)))
+    router = parsed.filter(parse.sink_keep(S.SINK_ROUTER))
     want = {
         (r["window"]["start"], r["window"]["end"]): (r["n_requests"], r["p50_service"])
         for r in router.groupBy(F.window("ts", "1 minute"))
         .agg(
             F.count("*").alias("n_requests"),
-            F.percentile_approx(
-                F.regexp_extract("text", S.ROUTER_INT_KEYS["service"], 1).cast("int"), 0.5
-            ).alias("p50_service"),
+            F.percentile_approx("p.service", 0.5).alias("p50_service"),
         )
         .collect()
     }
@@ -346,6 +366,54 @@ def test_dedup_ingest_stream_matches_batch(spark, tmp_path):
     assert spark.read.parquet(f"{out}/accepted").count() == n
 
 
+def _two_doc_ingest(spark, tmp_path):
+    """(src, index, out) for a one-file, two-document ingest stream whose
+    documents are both new."""
+    from pyspark.sql import functions as F
+
+    from lumbermill_spark.extras import streamcorpus, textstats
+
+    src = str(tmp_path / "ingest_src")
+    spark.createDataFrame(
+        [(1, "a doc", "en", "s", 5), (2, "b doc", "en", "s", 5)], streamcorpus.DOCS_SCHEMA
+    ).coalesce(1).write.parquet(src)
+    index = spark.createDataFrame([("x",)], "text string").select(
+        textstats.fingerprint(F.col("text")).alias("fingerprint")
+    )
+    return src, index, str(tmp_path / "ingest_out")
+
+
+def test_dedup_ingest_stream_raises_on_corrupt_seen_log(spark, tmp_path):
+    """A seen log that exists but cannot be read fails the stream instead of
+    being skipped: skipping it would re-accept every duplicate it holds."""
+    from lumbermill_spark.extras import streamcorpus
+
+    src, index, out = _two_doc_ingest(spark, tmp_path)
+    bad = os.path.join(out, "seen_log", "batch_id=0")
+    os.makedirs(bad)
+    with open(os.path.join(bad, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+
+    q = streamcorpus.start_dedup_ingest_stream(spark, src, index, out, available_now=True)
+    with pytest.raises(Exception):
+        q.awaitTermination(300)
+    assert not os.path.isdir(os.path.join(out, "accepted"))
+
+
+def test_dedup_ingest_stream_reads_staging_only_seen_log(spark, tmp_path):
+    """A seen log holding only a crashed first write's hidden staging files
+    reads as empty: the stream accepts the batch instead of failing on every
+    restart."""
+    from lumbermill_spark.extras import streamcorpus
+
+    src, index, out = _two_doc_ingest(spark, tmp_path)
+    os.makedirs(os.path.join(out, "seen_log", ".spark-staging-0"))
+
+    q = streamcorpus.start_dedup_ingest_stream(spark, src, index, out, available_now=True)
+    q.awaitTermination(300)
+    assert {r["doc_id"] for r in spark.read.parquet(f"{out}/accepted").collect()} == {1, 2}
+
+
 def test_cms_stream_matches_batch(spark, stream_input, tmp_path):
     """Sketch mergeability end-to-end: the cell-wise sum of per-micro-batch
     CMS partials equals the batch-built sketch exactly (forced multi-batch
@@ -424,3 +492,5 @@ def test_hll_stream_matches_batch(spark, stream_input, tmp_path):
         for r in d.groupBy("bucket").agg(FF.max(rank).cast("int").alias("reg")).collect()
     }
     assert got == want and len(got) > 0
+    batch = sketch.hll_registers(spark.read.parquet(stream_input), "text")
+    assert {(r["bucket"], r["reg"]) for r in batch.collect()} == want
