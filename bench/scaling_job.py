@@ -33,14 +33,11 @@ def main() -> None:
     tpath = datagen.ensure_transcripts(sf)
     n_turns = spark.read.parquet(tpath).count()
 
-    route_shuffle = os.environ.get("LUMBERMILL_ROUTE_SHUFFLE", "1") != "0"
-
     def one_run(parser):
         cfg = pipeline.PipelineConfig(
             parser=parser,
             sink_format="noop",
             write_metrics=False,
-            route_shuffle=route_shuffle,
         )
         t0 = time.time()
         pipeline.run(spark, tpath, "/tmp/lm_scaling_noop", cfg)

@@ -169,7 +169,7 @@ def ngram_jaccard_pairs(
     trigram arrays — no Python anywhere. The DuckDB oracle replays the exact
     same blocking, so LSH recall affects both sides identically."""
     d = (
-        _widen(docs.select("doc_id", "text", "lang"))
+        textstats._widen(docs.select("doc_id", "text", "lang"))
         .withColumn("n", F.length("text"))
         .select("doc_id", "lang", "n", _minhash_sig_from_text(F.col("text")).alias("sig"))
         .persist()
@@ -302,86 +302,23 @@ MINHASH_SIG_EXPR = (
 )
 
 
-_SHINGLE_SIG_SCHEMA = T.StructType(
-    [
-        T.StructField("shingles", T.ArrayType(T.StringType())),
-        T.StructField("sig", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-@F.pandas_udf(_SHINGLE_SIG_SCHEMA)
-def _shingles_and_sig(texts: pd.Series) -> pd.DataFrame:
-    """Fused shingle + hash + perm-min kernel (guide §4.2): per doc, the
-    DISTINCT k-char shingles in first-occurrence order (byte-identical to
-    array_distinct(transform(sequence(1, greatest(len-k+1,1)), i ->
-    substr(text,i,k)))) and the 64-perm minhash signature.
-
-    Why fused: at sf1 the Catalyst shingle transform alone cost 14.5 s of a
-    ~25 s signature stage (interpreted lambda + substr allocation per char
-    position), and JVM md5 ran once per shingle OCCURRENCE. Here shingles
-    are Python slices, and md5 (hashlib — the same function over the same
-    UTF-8 bytes) runs once per BATCH-UNIQUE shingle: near-duplicate corpora
-    (the entire point of this module) share most shingles across documents,
-    so the hash count drops by the duplication factor. The perm matrix
-    (A_j*x + B_j) mod p is computed once per unique shingle and min-read
-    per doc. Exact same integers as MINHASH_SIG_EXPR: x < 2^31, A < 2^31 ⇒
-    products < 2^62, int64-exact (pure-Python golden + oracle pinned)."""
-    import hashlib
-
-    A = np.asarray(PERM_A, dtype=np.int64)[:, None]
-    B = np.asarray(PERM_B, dtype=np.int64)[:, None]
-    k = SHINGLE_K
-    uniq: dict = {}
-    doc_shingles: list = []
-    doc_idx: list = []
-    for s in texts:
-        if s is None:
-            doc_shingles.append(None)
-            doc_idx.append(None)
-            continue
-        if len(s) > k:
-            sh = list(dict.fromkeys(s[i : i + k] for i in range(len(s) - k + 1)))
-        else:
-            sh = [s]  # len <= k: sequence(1,1) -> the whole text, once
-        idx = np.empty(len(sh), dtype=np.int64)
-        for i, g in enumerate(sh):
-            j = uniq.get(g)
-            if j is None:
-                j = len(uniq)
-                uniq[g] = j
-            idx[i] = j
-        doc_shingles.append(sh)
-        doc_idx.append(idx)
-    x = np.fromiter(
-        (
-            int.from_bytes(hashlib.md5(g.encode("utf-8")).digest()[:4], "big") % MINHASH_P
-            for g in uniq
-        ),
-        dtype=np.int64,
-        count=len(uniq),
-    )
-    # perm-min PER DOC on the doc's own hash slice (same shape as the
-    # plain perm-min kernel): a batch-wide (64 × n_unique) perm matrix
-    # looks cheaper but is multi-GB when shingle sharing is low — only the
-    # md5 amortization uses the batch-level dedup.
-    sigs = [
-        None if ix is None else ((A * x[ix][None, :] + B) % MINHASH_P).min(axis=1)
-        for ix in doc_idx
-    ]
-    return pd.DataFrame({"shingles": doc_shingles, "sig": sigs})
-
-
 @F.pandas_udf(T.ArrayType(T.LongType()))
 def _minhash_sig_from_text(texts: pd.Series) -> pd.Series:
-    """Sig-ONLY fused kernel — the hot-path variant of _shingles_and_sig.
-    Measured at sf1 (556k prefix-capped conversations): returning the
+    """Fused minhash signature kernel (guide §4.2): per doc, the DISTINCT
+    k-char shingles (the set SHINGLES_EXPR builds), md5 once per
+    BATCH-UNIQUE shingle (hashlib — the same function over the same UTF-8
+    bytes; near-duplicate corpora share most shingles, so the hash count
+    drops by the duplication factor), then the 64-perm min on the doc's own
+    hash slice. Exact same integers as MINHASH_SIG_EXPR: x < 2^31, A < 2^31
+    ⇒ products < 2^62, int64-exact (pure-Python golden + oracle pinned).
+    NULL text gives a NULL signature.
+
+    Signature only: at sf1 (556k prefix-capped conversations) returning the
     shingle string arrays through Arrow cost ~45 s of JVM-side array
     re-assembly alone; the signature by itself is 16.5 s vs 34.8 s for the
     JVM shingle transform + md5 + perm-min chain. Shingle strings are
-    reconstructed JVM-side later, only for the handful of docs that survive
-    the estimate filter (minhash_lsh_pairs). Same integers: md5 memoized
-    per batch-unique shingle, perm-min per doc."""
+    rebuilt JVM-side later, only for the handful of docs that survive the
+    estimate filter (minhash_lsh_pairs)."""
     import hashlib
 
     A = np.asarray(PERM_A, dtype=np.int64)[:, None]
@@ -408,48 +345,6 @@ def _minhash_sig_from_text(texts: pd.Series) -> pd.Series:
             i += 1
         out.append(((A * vals[None, :] + B) % MINHASH_P).min(axis=1))
     return pd.Series(out)
-
-
-def _widen(docs: DataFrame) -> DataFrame:
-    """Signature computation is CPU-bound per row; a small/few-file input
-    (locally: one parquet file → 3 partitions on 32 cores) must be widened
-    before it. The decision comes from scan metadata (``inputFiles``), not
-    an RDD getNumPartitions round-trip — that forces an extra conversion
-    plan per call and does not exist under Spark Connect. A
-    100 TB input has far more files than defaultParallelism and passes
-    through untouched; a non-file source (no listable inputs) is widened
-    defensively — the shuffle is cheap exactly when it is unnecessary."""
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    try:
-        nfiles = len(docs.inputFiles())
-    except Exception:
-        nfiles = 0
-    if nfiles >= target:  # each file yields ≥1 scan partition
-        return docs
-    return docs.repartition(target, "doc_id")
-
-
-def minhash_signatures(docs: DataFrame, impl: str = "arrow") -> DataFrame:
-    """doc_id, shingles (distinct k-char shingles), sig (64 bigint minhashes).
-
-    impl='arrow' (default): ONE fused vectorized kernel for shingles + md5
-    + perm-min (_shingles_and_sig — md5 per batch-unique shingle).
-    impl='native': the whole signature as one SQL fold — same values
-    (tests/test_dedup_golden.py), slower."""
-    d = _widen(docs.select("doc_id", "text"))
-    if impl == "native":
-        # NULL text → NULL shingles and sig, as the arrow kernel gives (the
-        # bare fold would see shingles [NULL] and return the all-P sentinel)
-        present = F.col("text").isNotNull()
-        return (
-            d.withColumn("shingles", F.when(present, F.expr(SHINGLES_EXPR)))
-            .withColumn("sig", F.when(present, F.expr(MINHASH_SIG_EXPR)))
-            .drop("text")
-        )
-    return (
-        d.withColumn("_ss", _shingles_and_sig(F.col("text")))
-        .select("doc_id", F.col("_ss.shingles").alias("shingles"), F.col("_ss.sig").alias("sig"))
-    )
 
 
 def _minhash_bands(sigs: DataFrame) -> DataFrame:
@@ -499,7 +394,7 @@ def minhash_lsh_pairs(
     tiny pair-id set and rebuilds their shingle sets JVM-side — the exact
     same per-doc sets, so sim values are unchanged (oracle-pinned)."""
     sigs = (
-        _widen(docs.select("doc_id", "text"))
+        textstats._widen(docs.select("doc_id", "text"))
         .select("doc_id", _minhash_sig_from_text(F.col("text")).alias("sig"))
         .persist()
     )
@@ -653,7 +548,7 @@ def simhash_signatures(docs: DataFrame, impl: str = "arrow") -> DataFrame:
     64-bit-position majority fold in a vectorized pandas UDF. impl='native':
     the whole signature as one SQL fold — same values
     (tests/test_dedup_golden.py), slower."""
-    d = _widen(docs.select("doc_id", "text"))
+    d = textstats._widen(docs.select("doc_id", "text"))
     if impl == "native":
         return d.select("doc_id", F.expr(_SIMHASH_BANDS_EXPR).alias("bands"))
     return d.select("doc_id", F.expr(_TOKEN_XS).alias("xs")).select(
@@ -1184,10 +1079,8 @@ def remove_duplicate_spans(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans"),
         F.sum("span_tokens").alias("_nd"),
     )
-    t = F.trim(F.col(text_col))
-    toks = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
     return (
-        docs.select("doc_id", toks.alias("_ts"))
+        docs.select("doc_id", textstats.ws_words(F.col(text_col)).alias("_ts"))
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",

@@ -30,12 +30,10 @@ def _bucket(tok, row: int):
 
 
 def _tokens(df: DataFrame, text_col: str) -> DataFrame:
-    from .textstats import _widen
+    from .textstats import _widen, ws_words
 
     df = _widen(df)  # single-row-group corpus scans yield 1-2 partitions
-    t = F.trim(F.lower(F.col(text_col)))
-    words = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
-    return df.select(F.explode(words).alias("token"))
+    return df.select(F.explode(ws_words(F.lower(F.col(text_col)))).alias("token"))
 
 
 def cms_build(df: DataFrame, text_col: str = "text") -> DataFrame:

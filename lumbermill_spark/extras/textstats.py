@@ -52,7 +52,9 @@ def _post_shuffle(df: DataFrame) -> bool:
     """True when the analyzed plan contains an aggregate/join/window/
     repartition/checkpoint — the frame's partitioning was already decided by
     an exchange (e.g. rendered conversations out of render_conversations'
-    groupBy), so widening it again would only add a useless shuffle."""
+    groupBy), so widening it again would only add a useless shuffle. Walks
+    the private JVM plan, so it raises where there is none; _widen calls it
+    inside its try."""
     stack = [df._jdf.queryExecution().analyzed()]
     while stack:
         node = stack.pop()
@@ -66,24 +68,26 @@ def _post_shuffle(df: DataFrame) -> bool:
 
 def _widen(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """Spread a narrow corpus scan across the cluster before per-row-heavy
-    text work (same idea as dedup._widen). The corpus tables here are small
-    single-row-group parquet files, and a row group is parquet's split unit
-    — the scan yields 1-2 partitions no matter what
-    spark.sql.files.maxPartitionBytes says, so every regex/array projection
-    was bottlenecked on 1-2 of local[32]'s cores (measured: pmi 3.4 s → 0.8 s
-    at sf0.1 from this alone). A 100 TB input has more files than cores and
-    passes through untouched; a frame that already crossed a shuffle
-    boundary (conv render output, checkpoints) is returned unchanged, so
-    composed chains never pay a second exchange."""
+    text work — the one widen rule of the extras (textstats, dedup, sketch,
+    similarity). The corpus tables here are small single-row-group parquet
+    files, and a row group is parquet's split unit — the scan yields 1-2
+    partitions no matter what spark.sql.files.maxPartitionBytes says, so
+    every regex/array projection was bottlenecked on 1-2 of local[32]'s
+    cores (measured: pmi 3.4 s → 0.8 s at sf0.1 from this alone). The
+    decision reads scan metadata (``inputFiles``) and the analyzed plan,
+    never an RDD getNumPartitions round-trip. A 100 TB input has more files
+    than cores and passes through untouched; a frame that already crossed a
+    shuffle boundary (conv render output, checkpoints) is returned
+    unchanged, so composed chains never pay a second exchange; so is a
+    frame whose files or plan cannot be read (no listable source, no JVM
+    plan)."""
     if key not in df.columns:
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        nfiles = len(df.inputFiles())
+        if len(df.inputFiles()) >= target or _post_shuffle(df):
+            return df
     except Exception:
-        return df
-    if nfiles >= target or _post_shuffle(df):
         return df
     return df.repartition(target, key)
 
@@ -91,6 +95,14 @@ def _widen(df: DataFrame, key: str = "doc_id") -> DataFrame:
 def ws_token_count(text: Column) -> Column:
     t = F.trim(text)
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+"))).cast("int")
+
+
+def ws_words(text: Column) -> Column:
+    """Whitespace words: split(trim(text), '\\s+'), and an empty array for
+    empty or space-only text (where split would give ['']). NULL stays NULL.
+    Callers that count lowercased words pass F.lower(col)."""
+    t = F.trim(text)
+    return F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
 
 
 _BPE_KEEP_CHARS = (
@@ -255,6 +267,58 @@ PACK_BUCKET = 4096  # docs per prefix-sum bucket (see pack_shards)
 MAX_PACK_BUCKETS = 1_000_000  # driver-prefix bound: #buckets of LONGS
 
 
+def _doc_id_bucket(df: DataFrame, bucket: int | None, op: str) -> Column:
+    """The doc_id-order bucket column of pack_shards/pack_sequences:
+    floor(doc_id / bucket). bucket=None auto-scales from max(doc_id) (a
+    column-pruned, shuffle-free pre-aggregate that never tokenizes) to
+    max(PACK_BUCKET, ceil(ids/MAX_PACK_BUCKETS)); an explicit bucket is
+    honored but warns when it would blow that driver-prefix bound."""
+    max_id = df.select(F.max("doc_id").alias("m")).first()["m"] or 0
+    if bucket is None:
+        bucket = max(PACK_BUCKET, -((max_id + 1) // -MAX_PACK_BUCKETS))
+    elif (max_id + 1) / bucket > 2 * MAX_PACK_BUCKETS:
+        import warnings
+
+        warnings.warn(
+            f"{op}: bucket={bucket} yields ~{(max_id + 1) // bucket:,} "
+            f"driver-side prefix rows (> {MAX_PACK_BUCKETS:,} target); raise "
+            "`bucket` or pass bucket=None to auto-scale",
+            stacklevel=3,
+        )
+    return F.floor(F.col("doc_id") / bucket).cast("long")
+
+
+def _bucket_offsets(d: DataFrame, order_cols: list[str]) -> DataFrame:
+    """Add `offset_tokens`, the exclusive prefix sum of `n_tokens` over the
+    global (bucket, *order_cols) order — the two-level scan shared by the
+    three packers. A global running sum as ONE window (no partition) would
+    serialize 10^12 rows through a single task. Instead: (1) per-bucket
+    token subtotals — a tiny grouped aggregate, one row per bucket — are
+    prefix-summed on the driver and broadcast back as exclusive bucket
+    offsets; (2) a window co-partitioned on bucket finishes the sum inside
+    each bucket. `bucket` must be a prefix of the global order, and its
+    count bounded (MAX_PACK_BUCKETS): the driver prefix scans one long per
+    bucket."""
+    subtot = d.groupBy("bucket").agg(F.sum("n_tokens").alias("s")).collect()
+    acc = 0
+    rows = []
+    for r in sorted(subtot, key=lambda r: r["bucket"]):
+        rows.append((r["bucket"], acc))
+        acc += r["s"]
+    offsets = F.broadcast(
+        d.sparkSession.createDataFrame(rows, "bucket long, bucket_offset long")
+    )
+    w = (
+        Window.partitionBy("bucket")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return d.join(offsets, "bucket").withColumn(
+        "offset_tokens",
+        (F.col("bucket_offset") + F.coalesce(F.sum("n_tokens").over(w), F.lit(0))).cast("long"),
+    )
+
+
 def pack_shards(
     df: DataFrame,
     budget_tokens: int = DEFAULT_SHARD_BUDGET,
@@ -267,60 +331,23 @@ def pack_shards(
     floor(exclusive-prefix-token-count / budget) — deterministic, replayable
     by a plain running sum in the oracle).
 
-    A global running sum as ONE window (`ORDER BY doc_id` with no partition)
-    would serialize 10^12 rows through a single task. Instead the classic
-    two-level scan: (1) per-bucket token subtotals — a tiny grouped
-    aggregate, #buckets = #docs/bucket rows — are prefix-summed on the
-    driver and broadcast back as exclusive offsets; (2) the in-bucket
-    exclusive cumsum is a window co-partitioned on bucket.
-
-    The driver-side prefix is a scan of #buckets LONGS, so #buckets must
-    stay bounded (~10^6) no matter the corpus size. With bucket=None
-    (default) it is AUTO-SCALED from max(doc_id) — a column-pruned,
-    shuffle-free pre-aggregate that never tokenizes — as
-    max(PACK_BUCKET, ceil(ids/MAX_PACK_BUCKETS)): 4096 at test scale,
-    growing past 10^9.6 docs so the prefix never exceeds MAX_PACK_BUCKETS
-    rows. An explicit `bucket` is honored but warns when it would blow that
-    bound (round-4 advice: the fixed default silently made the prefix
-    O(#docs/4096) at the 10^12-doc target).
+    The exclusive prefix is _bucket_offsets' two-level scan over doc_id
+    buckets (_doc_id_bucket: auto-scaled so the driver prefix stays under
+    MAX_PACK_BUCKETS rows at any corpus size; round-4 advice: the fixed
+    default silently made the prefix O(#docs/4096) at the 10^12-doc
+    target).
 
     Output: (doc_id, n_tokens, offset_tokens, shard_id) — one row per doc;
     offset_tokens is the exclusive global prefix, kept so the oracle
     comparison pins the whole scan, not just the bucketing."""
     df = _widen(df)
-    max_id = df.select(F.max("doc_id").alias("m")).first()["m"] or 0
-    if bucket is None:
-        bucket = max(PACK_BUCKET, -((max_id + 1) // -MAX_PACK_BUCKETS))
-    elif (max_id + 1) / bucket > 2 * MAX_PACK_BUCKETS:
-        import warnings
-
-        warnings.warn(
-            f"pack_shards: bucket={bucket} yields ~{(max_id + 1) // bucket:,} "
-            f"driver-side prefix rows (> {MAX_PACK_BUCKETS:,} target); raise "
-            "`bucket` or pass bucket=None to auto-scale",
-            stacklevel=2,
-        )
-    d = df.select("doc_id", bpe_token_count(F.col(text_col)).alias("n_tokens"))
-    d = d.withColumn("bucket", F.floor(F.col("doc_id") / bucket).cast("long"))
-    subtot = d.groupBy("bucket").agg(F.sum("n_tokens").alias("s")).collect()
-    acc = 0
-    rows = []
-    for r in sorted(subtot, key=lambda r: r["bucket"]):
-        rows.append((r["bucket"], acc))
-        acc += r["s"]
-    spark = df.sparkSession
-    offsets = F.broadcast(spark.createDataFrame(rows, "bucket long, bucket_offset long"))
-    w = (
-        Window.partitionBy("bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    d = df.select(
+        "doc_id",
+        bpe_token_count(F.col(text_col)).alias("n_tokens"),
+        _doc_id_bucket(df, bucket, "pack_shards").alias("bucket"),
     )
     return (
-        d.join(offsets, "bucket")
-        .withColumn(
-            "offset_tokens",
-            (F.col("bucket_offset") + F.coalesce(F.sum("n_tokens").over(w), F.lit(0))).cast("long"),
-        )
+        _bucket_offsets(d, ["doc_id"])
         .select(
             "doc_id",
             "n_tokens",
@@ -796,6 +823,15 @@ def remove_frequent_lines(
 UNIGRAM_VOCAB_K = 10_000  # vocab cap; broadcast side stays K rows
 
 
+def _top_k(counts: DataFrame, k: int, tok: str = "tok", c: str = "c") -> DataFrame:
+    """The k most frequent rows of a (token, count) table, count descending
+    then token ascending, so the vocabulary is deterministic — a distributed
+    TakeOrdered, never a global sort of the full vocabulary. Every top-K
+    vocabulary in this module (the LM scorers, vocab_topk, zipf_fit) takes
+    its rows from here."""
+    return counts.orderBy(F.col(c).desc(), F.col(tok)).limit(k)
+
+
 def unigram_logprob(
     df: DataFrame, vocab_k: int = UNIGRAM_VOCAB_K, text_col: str = "text"
 ) -> DataFrame:
@@ -811,10 +847,7 @@ def unigram_logprob(
     Output per doc: n_tokens, n_oov, avg_logprob (natural log, 6 dp; NULL
     for empty docs). Empty documents survive with n_tokens = 0."""
     df = _widen(df)
-    words = F.when(
-        F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
-    ).otherwise(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
-    toks = df.select("doc_id", F.explode_outer(words).alias("tok"))
+    toks = df.select("doc_id", F.explode_outer(ws_words(F.lower(F.col(text_col)))).alias("tok"))
 
     # The count table is vocab-sized (small); persist it so totals and the
     # top-K don't each re-tokenize the corpus, then pin the two tiny derived
@@ -831,8 +864,7 @@ def unigram_logprob(
         F.sum("c").alias("n_total"), F.count("*").alias("v_total")
     )
     vocab = (
-        counts.orderBy(F.col("c").desc(), F.col("tok"))
-        .limit(vocab_k)
+        _top_k(counts, vocab_k)
         .crossJoin(F.broadcast(totals))
         .select(
             "tok",
@@ -935,11 +967,10 @@ def corpus_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 # shuffled shard packing — the "global shuffle then pack" step before
 # pre-training: documents are packed in a deterministic PSEUDORANDOM order
 # (md5(salt:doc_id), doc_id) instead of doc_id order, so consecutive
-# training shards mix the corpus. Same two-level prefix-sum shape as
+# training shards mix the corpus. Same _bucket_offsets prefix sum as
 # pack_shards — the bucket key is the TOP BITS of the shuffle hash, which is
-# a prefix of the global shuffle order, so per-bucket subtotals driver-
-# prefixed and broadcast back + an in-bucket window reproduce the exact
-# global running sum without a single-task sort. Bucket count auto-scales
+# a prefix of the global shuffle order, so the two-level scan reproduces the
+# exact global running sum without a single-task sort. Bucket count auto-scales
 # (power of two) so both the driver prefix and the per-bucket window stay
 # bounded at any corpus size.
 # ---------------------------------------------------------------------------
@@ -993,27 +1024,9 @@ def pack_shards_shuffled(
     bits = 12  # 4096 buckets at test scale ...
     while (1 << bits) * PACK_BUCKET < n_docs and (1 << bits) < MAX_PACK_BUCKETS:
         bits += 1  # ... growing so ~PACK_BUCKET docs/bucket, capped at 2^20
-    shift = 32 - bits
-    d = d0.withColumn("bucket", F.shiftrightunsigned(F.col("shuffle_key"), shift))
-    subtot = d.groupBy("bucket").agg(F.sum("n_tokens").alias("s")).collect()
-    acc = 0
-    rows = []
-    for r in sorted(subtot, key=lambda r: r["bucket"]):
-        rows.append((r["bucket"], acc))
-        acc += r["s"]
-    spark = df.sparkSession
-    offsets = F.broadcast(spark.createDataFrame(rows, "bucket long, bucket_offset long"))
-    w = (
-        Window.partitionBy("bucket")
-        .orderBy("shuffle_key", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    d = d0.withColumn("bucket", F.shiftrightunsigned(F.col("shuffle_key"), 32 - bits))
     out = (
-        d.join(offsets, "bucket")
-        .withColumn(
-            "offset_tokens",
-            (F.col("bucket_offset") + F.coalesce(F.sum("n_tokens").over(w), F.lit(0))).cast("long"),
-        )
+        _bucket_offsets(d, ["shuffle_key", "doc_id"])
         .select(
             "doc_id",
             "n_tokens",
@@ -1028,7 +1041,7 @@ def pack_shards_shuffled(
 # ---------------------------------------------------------------------------
 # sequence packing, materialized — the step after pack_shards: each shard's
 # documents are concatenated (EOS-separated, doc_id order) into the actual
-# training sequence. Same two-level prefix sum as pack_shards, but the text
+# training sequence. Same _bucket_offsets prefix sum as pack_shards, but the text
 # column RIDES THROUGH the bucket window instead of being re-joined on
 # doc_id afterwards — the subtotal branch only aggregates n_tokens, so
 # Catalyst prunes text out of it, and the full text bytes move exactly
@@ -1054,34 +1067,14 @@ def pack_sequences(
     exactly (the separator is not counted; a production tokenizer counts its
     EOS as one token per doc — add n_docs if needed)."""
     df = _widen(df)
-    max_id = df.select(F.max("doc_id").alias("m")).first()["m"] or 0
-    if bucket is None:
-        bucket = max(PACK_BUCKET, -((max_id + 1) // -MAX_PACK_BUCKETS))
     d = df.select(
         "doc_id",
         F.col(text_col).alias("_txt"),
         bpe_token_count(F.col(text_col)).alias("n_tokens"),
-    ).withColumn("bucket", F.floor(F.col("doc_id") / bucket).cast("long"))
-    subtot = d.groupBy("bucket").agg(F.sum("n_tokens").alias("s")).collect()
-    acc = 0
-    rows = []
-    for r in sorted(subtot, key=lambda r: r["bucket"]):
-        rows.append((r["bucket"], acc))
-        acc += r["s"]
-    spark = df.sparkSession
-    offsets = F.broadcast(spark.createDataFrame(rows, "bucket long, bucket_offset long"))
-    w = (
-        Window.partitionBy("bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
+        _doc_id_bucket(df, bucket, "pack_sequences").alias("bucket"),
     )
-    offs = (
-        d.join(offsets, "bucket")
-        .withColumn(
-            "offset_tokens",
-            (F.col("bucket_offset") + F.coalesce(F.sum("n_tokens").over(w), F.lit(0))).cast("long"),
-        )
-        .withColumn("shard_id", F.floor(F.col("offset_tokens") / budget_tokens).cast("long"))
+    offs = _bucket_offsets(d, ["doc_id"]).withColumn(
+        "shard_id", F.floor(F.col("offset_tokens") / budget_tokens).cast("long")
     )
     docs_struct = F.array_sort(F.collect_list(F.struct("doc_id", "_txt")))
     return offs.groupBy("shard_id").agg(
@@ -1187,9 +1180,7 @@ def chunk_sliding(
     df = _widen(df)
     if stride <= 0 or chunk_len < stride:
         raise ValueError(f"need 0 < stride <= chunk_len, got {stride}, {chunk_len}")
-    t = F.trim(F.col(text_col))
-    toks = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
-    d = df.select("doc_id", toks.alias("_ts")).withColumn("_n", F.size("_ts"))
+    d = df.select("doc_id", ws_words(F.col(text_col)).alias("_ts")).withColumn("_n", F.size("_ts"))
     n = F.col("_n")
     n_chunks = (
         F.when(n == 0, F.lit(0))
@@ -1230,6 +1221,63 @@ BIGRAM_VOCAB_K = 10_000
 BOS = "<s>"
 UNK = "<unk>"
 
+# The three n-gram scorers (bigram_logprob, kn_logprob, trigram_logprob)
+# share their first three steps, one helper each: the <s>-padded context
+# events, the top-K vocabulary, and the broadcast <unk> collapse. Each
+# scorer keeps its own counts, probability formula and output select.
+
+
+def _ngram_events(df: DataFrame, text_col: str, order: int) -> DataFrame:
+    """(doc_id, p{order-1}_raw, …, p1_raw, cur_raw): one row per lowercased
+    whitespace token with its order-1 preceding tokens, <s>-padded at the
+    document start. A document without tokens (empty or NULL text) yields
+    one all-NULL row (explode_outer), dropped by _unk_collapse."""
+    ks = range(order - 1, 0, -1)
+    ctx = "".join(f"if(i < {k}, '{BOS}', _ts[i-{k}]) AS p{k}, " for k in ks)
+    ev = F.expr(f"transform(_ts, (x, i) -> struct({ctx}x AS cur))")
+    return (
+        df.select("doc_id", ws_words(F.lower(F.col(text_col))).alias("_ts"))
+        .select("doc_id", F.explode_outer(ev).alias("_ev"))
+        .select(
+            "doc_id",
+            *[F.col(f"_ev.p{k}").alias(f"p{k}_raw") for k in ks],
+            F.col("_ev.cur").alias("cur_raw"),
+        )
+    )
+
+
+def _lm_vocab(ev: DataFrame, k: int) -> DataFrame:
+    """The scorers' vocabulary (tok): the _top_k current tokens of an event
+    frame, pinned by an eager localCheckpoint — it is broadcast once per
+    collapsed position and counted on the driver (K-bounded)."""
+    counts = (
+        ev.filter(F.col("cur_raw").isNotNull()).groupBy("cur_raw").agg(F.count("*").alias("c"))
+    )
+    top = _top_k(counts, k, "cur_raw").select(F.col("cur_raw").alias("tok"))
+    return top.localCheckpoint(eager=True)
+
+
+def _unk_collapse(ev: DataFrame, vocab: DataFrame, bos: tuple[str, ...]) -> DataFrame:
+    """<unk>-collapse every `{pos}_raw` column of an event frame into `pos`
+    against the broadcast vocabulary (one left join per position): NULL
+    stays NULL, <s> stays <s> in the `bos` positions, an in-vocab token
+    stays itself, anything else becomes <unk>. Rows without a current token
+    (empty documents) are dropped."""
+    positions = [c[: -len("_raw")] for c in ev.columns if c.endswith("_raw")]
+    out = ev
+    for pos in positions:
+        vb = F.broadcast(vocab.select(F.col("tok").alias(f"{pos}_raw"), F.lit(True).alias(f"_{pos}v")))
+        out = out.join(vb, f"{pos}_raw", "left")
+
+    def mapped(pos: str) -> Column:
+        raw = F.col(f"{pos}_raw")
+        m = F.when(raw.isNull(), None)
+        if pos in bos:
+            m = m.when(raw == BOS, F.lit(BOS))
+        return m.when(F.col(f"_{pos}v"), raw).otherwise(F.lit(UNK)).alias(pos)
+
+    return out.select("doc_id", *[mapped(p) for p in positions]).filter(F.col("cur").isNotNull())
+
 
 def bigram_logprob(
     df: DataFrame, vocab_k: int = BIGRAM_VOCAB_K, text_col: str = "text"
@@ -1239,58 +1287,19 @@ def bigram_logprob(
     types (6 dp; per-bigram logp rounded to 12 dp before the mean so libm
     ulp skew can't break the value hash; NULL for empty docs)."""
     df = _widen(df)
-    t = F.trim(F.lower(F.col(text_col)))
-    toks = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
-    pairs = df.select("doc_id", toks.alias("_ts")).select(
-        "doc_id",
-        F.explode_outer(
-            F.expr(f"transform(_ts, (x, i) -> struct(if(i = 0, '{BOS}', _ts[i-1]) AS p, x AS c))")
-        ).alias("_pr"),
-    ).select("doc_id", F.col("_pr.p").alias("prev_raw"), F.col("_pr.c").alias("cur_raw"))
-
-    vocab = (
-        pairs.filter(F.col("cur_raw").isNotNull())
-        .groupBy("cur_raw")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.col("c").desc(), F.col("cur_raw"))
-        .limit(vocab_k)
-        .select(F.col("cur_raw").alias("tok"))
-        .localCheckpoint(eager=True)
-    )
+    pairs = _ngram_events(df, text_col, 2)
+    vocab = _lm_vocab(pairs, vocab_k)
     vm = vocab.count() + 1  # |vocab| + <unk>; driver-side K-bounded scalar
-
-    vc = F.broadcast(vocab.select(F.col("tok").alias("cur_raw"), F.lit(True).alias("_cv")))
-    vp = F.broadcast(vocab.select(F.col("tok").alias("prev_raw"), F.lit(True).alias("_pv")))
-    m = (
-        pairs.join(vc, "cur_raw", "left")
-        .join(vp, "prev_raw", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("prev_raw").isNull(), None)
-            .when(F.col("prev_raw") == BOS, F.lit(BOS))
-            .when(F.col("_pv"), F.col("prev_raw"))
-            .otherwise(F.lit(UNK))
-            .alias("prev_m"),
-            F.when(F.col("cur_raw").isNull(), None)
-            .when(F.col("_cv"), F.col("cur_raw"))
-            .otherwise(F.lit(UNK))
-            .alias("cur_m"),
-        )
-    )
-    bc = (
-        m.filter(F.col("cur_m").isNotNull())
-        .groupBy("prev_m", "cur_m")
-        .agg(F.count("*").alias("cb"))
-        .localCheckpoint(eager=True)
-    )
-    cc = bc.groupBy("prev_m").agg(F.sum("cb").alias("ct"))  # derived free
+    m = _unk_collapse(pairs, vocab, bos=("p1",))
+    bc = m.groupBy("p1", "cur").agg(F.count("*").alias("cb")).localCheckpoint(eager=True)
+    cc = bc.groupBy("p1").agg(F.sum("cb").alias("ct"))  # derived free
     scored = (
-        m.join(bc, ["prev_m", "cur_m"])  # total: the corpus scores itself
-        .join(F.broadcast(cc), "prev_m")
+        m.join(bc, ["p1", "cur"])  # total: the corpus scores itself
+        .join(F.broadcast(cc), "p1")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("_nt"),
-            F.sum(F.when(F.col("cur_m") == UNK, 1).otherwise(0)).alias("_nu"),
+            F.sum(F.when(F.col("cur") == UNK, 1).otherwise(0)).alias("_nu"),
             F.avg(F.round(F.log((F.col("cb") + 1) / (F.col("ct") + vm)), 12)).alias("_alp"),
         )
     )
@@ -1380,8 +1389,7 @@ def vocab_topk(df: DataFrame, k: int = VOCAB_TOPK_K, text_col: str = "text") -> 
     whitespace tokens, each with its corpus share and the running coverage
     of the vocabulary so far (6 dp, ties broken token-ascending)."""
     df = _widen(df)
-    t = F.trim(F.lower(F.col(text_col)))
-    words = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
+    words = ws_words(F.lower(F.col(text_col)))
     counts = (
         df.select(F.explode(words).alias("token"))
         .groupBy("token")
@@ -1392,7 +1400,7 @@ def vocab_topk(df: DataFrame, k: int = VOCAB_TOPK_K, text_col: str = "text") -> 
     # consumed at the final action, which would otherwise re-tokenize the
     # whole corpus after the unpersist below (unigram_logprob's hygiene)
     total = counts.agg(F.sum("count").alias("_tot")).localCheckpoint(eager=True)
-    top = counts.orderBy(F.col("count").desc(), F.col("token")).limit(k).localCheckpoint(eager=True)
+    top = _top_k(counts, k, "token", "count").localCheckpoint(eager=True)
     counts.unpersist()
     w = Window.orderBy(F.col("count").desc(), F.col("token")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -1468,65 +1476,17 @@ def trigram_logprob(
     cut = int(train_frac * (1 << 32))
     is_train = _tri_hash("doc_id", TRI_SALT) < cut
 
-    t = F.trim(F.lower(F.col(text_col)))
-    toks = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
-    BOS_L, UNK_L = BOS, UNK
-    tri_stream = F.expr(
-        "transform(_ts, (x, i) -> struct("
-        f"if(i < 2, '{BOS_L}', _ts[i-2]) AS p2, "
-        f"if(i < 1, '{BOS_L}', _ts[i-1]) AS p1, "
-        "x AS c))"
-    )
-
-    def _events(d: DataFrame) -> DataFrame:
-        return (
-            d.select("doc_id", toks.alias("_ts"))
-            .select("doc_id", F.explode_outer(tri_stream).alias("_tr"))
-            .select(
-                "doc_id",
-                F.col("_tr.p2").alias("p2_raw"),
-                F.col("_tr.p1").alias("p1_raw"),
-                F.col("_tr.c").alias("cur_raw"),
-            )
-        )
-
-    train_ev = _events(df.filter(is_train))
-    held_ev = _events(df.filter(~is_train))
-
-    vocab = (
-        train_ev.filter(F.col("cur_raw").isNotNull())
-        .groupBy("cur_raw")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.col("c").desc(), F.col("cur_raw"))
-        .limit(vocab_k)
-        .select(F.col("cur_raw").alias("tok"))
-        .localCheckpoint(eager=True)
-    )
+    train_ev = _ngram_events(df.filter(is_train), text_col, 3)
+    vocab = _lm_vocab(train_ev, vocab_k)
     vm = vocab.count() + 1  # |vocab| + <unk>, the add-one denominator V
-
-    def _mapped(ev: DataFrame) -> DataFrame:
-        """<unk>-collapse all three positions against the TRAIN vocab."""
-        out = ev
-        for pos in ("p2", "p1", "cur"):
-            vb = F.broadcast(vocab.select(F.col("tok").alias(f"{pos}_raw"), F.lit(True).alias(f"_{pos}v")))
-            out = out.join(vb, f"{pos}_raw", "left")
-        keep = lambda pos: (
-            F.when(F.col(f"{pos}_raw").isNull(), None)
-            .when(F.col(f"{pos}_raw") == BOS_L, F.lit(BOS_L))
-            .when(F.col(f"_{pos}v"), F.col(f"{pos}_raw"))
-            .otherwise(F.lit(UNK_L))
-        )
-        return out.select(
-            "doc_id",
-            keep("p2").alias("p2"),
-            keep("p1").alias("p1"),
-            keep("cur").alias("cur"),
-        ).filter(F.col("cur").isNotNull())
+    # a literal <s> token is the start symbol in every position here (the
+    # bigram scorers read it as a word when it is the current token)
+    bos = ("p2", "p1", "cur")
 
     # one pass builds the mapped train stream; pin it for the four actions
     # (c3 / c2 / c1 counts + the N scalar), then release — the count tables
     # are checkpointed so nothing re-reads the corpus after unpersist
-    tm = _mapped(train_ev).persist()
+    tm = _unk_collapse(train_ev, vocab, bos).persist()
     c3 = tm.groupBy("p2", "p1", "cur").agg(F.count("*").alias("c3")).localCheckpoint(eager=True)
     ctx3 = c3.groupBy("p2", "p1").agg(F.sum("c3").alias("t3"))  # derived free
     c2 = tm.groupBy("p1", "cur").agg(F.count("*").alias("c2")).localCheckpoint(eager=True)
@@ -1547,7 +1507,7 @@ def trigram_logprob(
         .otherwise(F.lit("uni"))
     )
     scored = (
-        _mapped(held_ev)
+        _unk_collapse(_ngram_events(df.filter(~is_train), text_col, 3), vocab, bos)
         .join(c3, ["p2", "p1", "cur"], "left")
         .join(c2.join(ctx2, "p1"), ["p1", "cur"], "left")
         .join(F.broadcast(c1), "cur", "left")
@@ -1555,7 +1515,7 @@ def trigram_logprob(
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("_nt"),
-            F.sum(F.when(F.col("cur") == UNK_L, 1).otherwise(0)).alias("_nu"),
+            F.sum(F.when(F.col("cur") == UNK, 1).otherwise(0)).alias("_nu"),
             F.sum(F.when(level == "tri", 1).otherwise(0)).alias("_l3"),
             F.sum(F.when(level == "bi", 1).otherwise(0)).alias("_l2"),
             F.sum(F.when(level == "uni", 1).otherwise(0)).alias("_l1"),
@@ -1832,9 +1792,8 @@ def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per doc: the seven Gopher signals, the verdict, and the fixed-order
     failed-rule reason string ('' when kept)."""
     df = _widen(df)
-    t = F.trim(F.col(text_col))
-    ws = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
-    d = df.select("doc_id", F.col(text_col).alias("_t"), ws.alias("_ws")).select(
+    t = F.col(text_col)
+    d = df.select("doc_id", t.alias("_t"), ws_words(t).alias("_ws")).select(
         "doc_id",
         "_t",
         "_ws",
@@ -2272,8 +2231,7 @@ def zipf_fit(df: DataFrame, k: int = ZIPF_TOPK, text_col: str = "text") -> DataF
     both sides and rounded to 6 dp. Scale shape: one token-count aggregate
     (corpus-sized, map-side combined), then everything runs on k rows."""
     df = _widen(df)
-    t = F.trim(F.lower(F.col(text_col)))
-    words = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
+    words = ws_words(F.lower(F.col(text_col)))
     counts = (
         df.select(F.explode(words).alias("token"))
         .groupBy("token")
@@ -2282,7 +2240,7 @@ def zipf_fit(df: DataFrame, k: int = ZIPF_TOPK, text_col: str = "text") -> DataF
     # top-k via distributed TakeOrderedAndProject FIRST; the rank window
     # then runs on the k survivors only (never a vocab-sized single
     # partition — the cms_topk discipline)
-    top = counts.orderBy(F.col("c").desc(), "token").limit(k)
+    top = _top_k(counts, k, "token")
     top = top.withColumn(
         "rank", F.row_number().over(Window.orderBy(F.col("c").desc(), "token"))
     )
@@ -2351,8 +2309,7 @@ def tfidf_keywords(df: DataFrame, k: int = TFIDF_TOPK, text_col: str = "text") -
     nothing global, nothing Python. The score multiplies tf by one ln()
     call, both single float64 ops, so 6-dp rounding is engine-stable."""
     df = _widen(df)
-    t = F.trim(F.lower(F.col(text_col)))
-    words = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
+    words = ws_words(F.lower(F.col(text_col)))
     tf = (
         df.select("doc_id", F.explode(words).alias("token"))
         .groupBy("doc_id", "token")
@@ -2399,8 +2356,7 @@ def pmi_collocations(df: DataFrame, k: int = PMI_TOPK, text_col: str = "text") -
     the rank window touches k rows only. The PMI is one ln() over a fixed
     ratio shape, so 6-dp rounding is engine-stable."""
     df = _widen(df)
-    t = F.trim(F.lower(F.col(text_col)))
-    words = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
+    words = ws_words(F.lower(F.col(text_col)))
     toks = df.select(F.explode(words).alias("tok"))
     # persisted: the unigram table feeds BOTH marginal joins and the token
     # total — three references that each re-exploded the corpus otherwise
@@ -2470,52 +2426,13 @@ def kn_logprob(
     from one <unk>-collapsed bigram table; the float shape is fixed and
     mirrored in the oracle. B and |vocab| are K-bounded driver scalars."""
     df = _widen(df)
-    t = F.trim(F.lower(F.col(text_col)))
-    toks = F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
-    pairs = df.select("doc_id", toks.alias("_ts")).select(
-        "doc_id",
-        F.explode_outer(
-            F.expr(f"transform(_ts, (x, i) -> struct(if(i = 0, '{BOS}', _ts[i-1]) AS p, x AS c))")
-        ).alias("_pr"),
-    ).select("doc_id", F.col("_pr.p").alias("prev_raw"), F.col("_pr.c").alias("cur_raw"))
-
-    vocab = (
-        pairs.filter(F.col("cur_raw").isNotNull())
-        .groupBy("cur_raw")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.col("c").desc(), F.col("cur_raw"))
-        .limit(vocab_k)
-        .select(F.col("cur_raw").alias("tok"))
-        .localCheckpoint(eager=True)
-    )
-    vc = F.broadcast(vocab.select(F.col("tok").alias("cur_raw"), F.lit(True).alias("_cv")))
-    vp = F.broadcast(vocab.select(F.col("tok").alias("prev_raw"), F.lit(True).alias("_pv")))
-    m = (
-        pairs.join(vc, "cur_raw", "left")
-        .join(vp, "prev_raw", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("prev_raw").isNull(), None)
-            .when(F.col("prev_raw") == BOS, F.lit(BOS))
-            .when(F.col("_pv"), F.col("prev_raw"))
-            .otherwise(F.lit(UNK))
-            .alias("prev_m"),
-            F.when(F.col("cur_raw").isNull(), None)
-            .when(F.col("_cv"), F.col("cur_raw"))
-            .otherwise(F.lit(UNK))
-            .alias("cur_m"),
-        )
-    )
-    bc = (
-        m.filter(F.col("cur_m").isNotNull())
-        .groupBy("prev_m", "cur_m")
-        .agg(F.count("*").alias("cb"))
-        .localCheckpoint(eager=True)
-    )
-    cc = bc.groupBy("prev_m").agg(
+    pairs = _ngram_events(df, text_col, 2)
+    m = _unk_collapse(pairs, _lm_vocab(pairs, vocab_k), bos=("p1",))
+    bc = m.groupBy("p1", "cur").agg(F.count("*").alias("cb")).localCheckpoint(eager=True)
+    cc = bc.groupBy("p1").agg(
         F.sum("cb").cast("long").alias("ct"), F.count("*").cast("long").alias("n1f")
     )
-    cont = bc.groupBy("cur_m").agg(F.count("*").cast("long").alias("n1b"))
+    cont = bc.groupBy("cur").agg(F.count("*").cast("long").alias("n1b"))
     b_types = float(bc.count())
     d = KN_DISCOUNT
     pkn = (
@@ -2523,13 +2440,13 @@ def kn_logprob(
         + (F.lit(d) * F.col("n1f") / F.col("ct")) * (F.col("n1b") / F.lit(b_types))
     )
     scored = (
-        m.join(bc, ["prev_m", "cur_m"])
-        .join(F.broadcast(cc), "prev_m")
-        .join(F.broadcast(cont), "cur_m")
+        m.join(bc, ["p1", "cur"])
+        .join(F.broadcast(cc), "p1")
+        .join(F.broadcast(cont), "cur")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("_nt"),
-            F.sum(F.when(F.col("cur_m") == UNK, 1).otherwise(0)).alias("_nu"),
+            F.sum(F.when(F.col("cur") == UNK, 1).otherwise(0)).alias("_nu"),
             F.avg(F.round(F.log(pkn), 12)).alias("_alp"),
         )
     )

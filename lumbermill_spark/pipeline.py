@@ -62,11 +62,6 @@ class PipelineConfig:
     # (the per-chunk file-id dictionary) and a driver-sized file list —
     # the cap bounds both (round-3 verdict, wrong #3 / next #6)
     chunk_files: int | None = None
-    # explicit salted routing shuffle before the fan-out. True is the real
-    # pipeline (sink placement needs it); False lets the aggregation's own
-    # hash exchange be the only routing — used to isolate the shuffle's cost
-    # in scaling measurements
-    route_shuffle: bool = True
     # which catalog-table (fs_managed=False) orphan chunks resume may DELETE:
     #   'owned' (default) — only chunk ids whose run_id this out_dir's ledger
     #     owns (begin/done markers), so a concurrent deployment sharing the
@@ -360,14 +355,13 @@ def run(
             parsed = parsed.withColumn("salt", route.salt_expr(F.col("turn_idx"), cfg.n_salts))
             keep = ["token", "time", "tool", "text", "msg_class", "p", "file_id", "salt"]
             parsed = parsed.select(*[c for c in keep if c in parsed.columns])
-            if cfg.route_shuffle:
-                # encode msg_class (avg ~11-char string) as a tinyint below the
-                # exchange and decode with a when-chain above it — Catalyst's
-                # column pruning keeps the decode on the reduce side, so the
-                # shuffle carries 1 byte instead of offset+string per row
-                parsed = parsed.withColumn("cls_id", C.encode_class(F.col("msg_class"))).drop("msg_class")
-                parsed = route.salted_repartition(parsed, nshuffle, salt=F.col("salt"))
-                parsed = parsed.withColumn("msg_class", C.decode_class(F.col("cls_id"))).drop("cls_id")
+            # encode msg_class (avg ~11-char string) as a tinyint below the
+            # exchange and decode with a when-chain above it — Catalyst's
+            # column pruning keeps the decode on the reduce side, so the
+            # shuffle carries 1 byte instead of offset+string per row
+            parsed = parsed.withColumn("cls_id", C.encode_class(F.col("msg_class"))).drop("msg_class")
+            parsed = route.salted_repartition(parsed, nshuffle, salt=F.col("salt"))
+            parsed = parsed.withColumn("msg_class", C.decode_class(F.col("cls_id"))).drop("cls_id")
             parsed = parsed.drop("salt")
             # the cache exists for the fan-out (6 downstream consumers in parquet
             # mode); in noop mode the single fused aggregation is the only

@@ -70,15 +70,26 @@ def _df(spark):
     )
 
 
-def test_minhash_signatures_match_pure_python(spark):
-    import pytest
+def _native_minhash(df):
+    """The signature as the native SQL fold: shingles, then the perm-min
+    over their md5s. NULL text → NULL shingles and sig, as the arrow kernel
+    gives (the bare fold would see shingles [NULL] and return the all-P
+    sentinel)."""
+    present = F.col("text").isNotNull()
+    return df.withColumn("shingles", F.when(present, F.expr(dedup.SHINGLES_EXPR))).withColumn(
+        "sig", F.when(present, F.expr(dedup.MINHASH_SIG_EXPR))
+    )
 
-    for impl in ("arrow", "native"):
+
+def test_minhash_signatures_match_pure_python(spark):
+    legs = {
+        "arrow": _df(spark).withColumn("sig", dedup._minhash_sig_from_text(F.col("text"))),
+        "native": _native_minhash(_df(spark)),
+    }
+    for impl, sigs in legs.items():
         got = {
             r["doc_id"]: r["sig"] and list(r["sig"])
-            for r in dedup.minhash_signatures(_df(spark), impl=impl)
-            .select("doc_id", "sig")
-            .collect()
+            for r in sigs.select("doc_id", "sig").collect()
         }
         for i, t in enumerate(TEXTS):
             assert got[i] == py_minhash_sig(t), f"[{impl}] minhash sig mismatch for {t!r}"
@@ -96,7 +107,7 @@ def test_simhash_bands_match_pure_python(spark):
 
 
 def test_minhash_shingles_are_distinct_ordered_sets(spark):
-    rows = dedup.minhash_signatures(_df(spark)).select("doc_id", "shingles").collect()
+    rows = _native_minhash(_df(spark)).select("doc_id", "shingles").collect()
     by_id = {r["doc_id"]: r["shingles"] and list(r["shingles"]) for r in rows}
     for sh in by_id.values():
         assert sh is None or len(sh) == len(set(sh))

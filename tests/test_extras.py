@@ -6,7 +6,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
 from lumbermill_spark.extras import dedup, multimodal, similarity, textstats
+from tools.selfcheck import normalize
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -129,6 +131,86 @@ def test_text_stats_temp_column_clash_raises(spark):
         textstats.with_quality(df)
     with pytest.raises(ValueError, match="_lc"):
         textstats.with_langid(df.withColumnRenamed("_q_alpha", "_LC"))
+
+
+# queries built on textstats' shared steps (the word splitter, the n-gram
+# vocabulary/<unk> core, the bucketed prefix sum, the widen rule)
+SHARED_STEP_QUERIES = [
+    "text_unigram_logprob",
+    "text_bigram_logprob",
+    "text_kn_logprob",
+    "text_trigram_logprob",
+    "text_vocab_topk",
+    "corpus_zipf",
+    "text_pack_shards",
+    "text_pack_shuffled",
+    "text_pack_sequences",
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "conv_near_dup",
+]
+
+
+@pytest.fixture(scope="module")
+def oracle():
+    """(duckdb connection with a view per sf table, oracle SQL by name);
+    the oracle SQL reads SF_ORACLE_DIR's transcripts, so point it here."""
+    import glob
+    import os
+
+    import duckdb
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(E, "SF_ORACLE_DIR", SF_DIR)
+        sqls = E.oracle_sql()
+    con = duckdb.connect()
+    for p in glob.glob(os.path.join(SF_DIR, "*.parquet")):
+        name = os.path.basename(p)[: -len(".parquet")]
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
+    yield con, sqls
+    con.close()
+
+
+@pytest.mark.parametrize("name", SHARED_STEP_QUERIES)
+def test_query_matches_duckdb_oracle(spark, oracle, name):
+    """The query equals its DuckDB oracle, compared as tools/selfcheck.py
+    compares (its normalize: sorted columns, order-insensitive rows,
+    full-precision floats)."""
+    con, sqls = oracle
+    df = E.queries()[name](spark, SF_DIR)
+    got = normalize(df.columns, [tuple(r) for r in df.collect()])
+    res = con.execute(sqls[name])
+    want = normalize([d[0] for d in res.description], res.fetchall())
+    assert got[0] == want[0], "columns differ"
+    assert len(got[1]) == len(want[1]), "row counts differ"
+    assert got[1] == want[1]
+
+
+@pytest.mark.parametrize("case", ["one_file_scan", "post_groupby", "many_file_scan", "plan_walk_fails"])
+def test_widen_rule(spark, tmp_path, monkeypatch, case):
+    """The extras' one widen rule: a scan with fewer files than
+    defaultParallelism is repartitioned on its key to defaultParallelism;
+    a frame that already crossed a shuffle, a scan with at least that many
+    files, and a frame whose plan cannot be walked come back unchanged."""
+    target = spark.sparkContext.defaultParallelism
+    rows = spark.range(8 * target).select(F.col("id").alias("doc_id"), F.lit("x").alias("text"))
+    n_files = target if case == "many_file_scan" else 1
+    rows.repartition(n_files).write.parquet(str(tmp_path / "t"))
+    df = spark.read.parquet(str(tmp_path / "t"))
+    assert len(df.inputFiles()) == n_files
+    if case == "post_groupby":
+        df = df.groupBy("doc_id").count()
+    if case == "plan_walk_fails":
+        def _raise(_):
+            raise AttributeError("no JVM plan")
+
+        monkeypatch.setattr(textstats, "_post_shuffle", _raise)
+    out = textstats._widen(df)
+    if case == "one_file_scan":
+        assert out.sameSemantics(df.repartition(target, "doc_id"))
+    else:
+        assert out is df
 
 
 def test_mm_stub_deterministic_and_md5(spark, docs):
