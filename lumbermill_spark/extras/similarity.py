@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import _plan
+
 SIGN_BITS = 6  # 64 buckets
 TOPK = 5
 LSH_TOPK = 3
@@ -27,6 +29,9 @@ IVF_CENTROIDS = 16  # vec_id 0..15 serve as deterministic coarse centroids
 IVF_NPROBE = 2
 IVF_TOPK = 3
 N_QUERIES_IVF = 24
+# most centroid rows _centroid_scores inlines into the plan as literals; a
+# larger table raises instead of filling the driver and every task's plan
+MAX_INLINE_CENTROIDS = 1024
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -42,14 +47,12 @@ def cosine_expr(a: Column, b: Column) -> Column:
 
 
 def _vecs(embeddings: DataFrame) -> DataFrame:
-    from .textstats import _widen
-
     if "v" in embeddings.columns:  # already projected (e.g. augmented frames)
         return embeddings
     # the embeddings table is a single-row-group parquet at gate/bench scale
     # → a 1-2 partition scan; the per-row cosine folds downstream are pure
     # CPU, so spread the scan first (no-op at real file counts)
-    return _widen(embeddings, "vec_id").select(
+    return _plan.widen(embeddings, "vec_id").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
 
@@ -86,9 +89,17 @@ def _centroid_scores(centroids: DataFrame) -> Column:
     inlined as a constant array of (neg-cosine, cid) score structs per row:
     ascending struct order == (csim DESC, cid ASC), exactly the old
     row_number ordering (negation is a sign flip, bit-exact). cid keeps its
-    source column type so downstream schemas are unchanged."""
+    source column type so downstream schemas are unchanged. The collect
+    reads at most MAX_INLINE_CENTROIDS + 1 rows, in the same job, and a
+    larger table raises ValueError."""
     cid_t = centroids.schema["cid"].dataType
-    rows = sorted(centroids.select("cid", "cv").collect(), key=lambda r: r["cid"])
+    rows = centroids.select("cid", "cv").limit(MAX_INLINE_CENTROIDS + 1).collect()
+    if len(rows) > MAX_INLINE_CENTROIDS:
+        raise ValueError(
+            f"centroid table has more than {MAX_INLINE_CENTROIDS} rows "
+            "(MAX_INLINE_CENTROIDS), too many to inline as plan literals"
+        )
+    rows = sorted(rows, key=lambda r: r["cid"])
     cents = F.array(
         *[
             F.struct(

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import _plan
+
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
 CMS_TOPK = 20
@@ -30,9 +32,9 @@ def _bucket(tok, row: int):
 
 
 def _tokens(df: DataFrame, text_col: str) -> DataFrame:
-    from .textstats import _widen, ws_words
+    from .textstats import ws_words
 
-    df = _widen(df)  # single-row-group corpus scans yield 1-2 partitions
+    df = _plan.widen(df)  # single-row-group corpus scans yield 1-2 partitions
     return df.select(F.explode(ws_words(F.lower(F.col(text_col)))).alias("token"))
 
 
@@ -58,9 +60,7 @@ def cms_build(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def cms_topk(
-    df: DataFrame, k: int = CMS_TOPK, text_col: str = "text", materialize: bool = True
-) -> DataFrame:
+def cms_topk(df: DataFrame, k: int = CMS_TOPK, text_col: str = "text") -> DataFrame:
     """Heavy hitters THROUGH the sketch: estimate every distinct token's
     count as min over rows of its cell, rank by (est DESC, token ASC), keep
     the top k, and report the exact count next to the estimate (est >=
@@ -75,10 +75,8 @@ def cms_topk(
     twice. The sketch broadcasts (<= DEPTH*WIDTH rows) and the token table
     probes it with an equality join."""
     toks = _tokens(df, text_col)
-    exact = toks.groupBy("token").agg(F.count("*").cast("bigint").alias("exact_cnt"))
-    if materialize:
-        exact = exact.persist()
-        exact.count()  # one corpus pass; sketch build + probe join both reuse it
+    exact = toks.groupBy("token").agg(F.count("*").cast("bigint").alias("exact_cnt")).persist()
+    exact.count()  # one corpus pass; sketch build + probe join both reuse it
     probes = exact.select(
         "token",
         "exact_cnt",
@@ -108,11 +106,7 @@ def cms_topk(
     out = ranked.withColumn(
         "rank", F.row_number().over(Window.orderBy(F.col("est_cnt").desc(), "token"))
     )
-    if not materialize:
-        return out  # lazy plan for inspection/tests; caller owns the caches
-    from .textstats import _materialize
-
-    return _materialize(out, exact)
+    return _plan.pin(out, exact)
 
 
 # ---------------------------------------------------------------------------

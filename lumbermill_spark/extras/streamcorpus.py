@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import fsio, streaming
-from . import textstats
+from . import _plan, textstats
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -61,7 +61,7 @@ def start_dedup_ingest_stream(
             seen = spark.read.schema("fingerprint string").parquet(seen_dir)
             new = new.join(seen, "fingerprint", "left_anti")
         # pin before the two writes below
-        out = new.select("doc_id", "fingerprint", "lang").localCheckpoint(eager=True)
+        out = _plan.pin(new.select("doc_id", "fingerprint", "lang"))
         streaming._write_batch(out.select("fingerprint"), batch_id, seen_dir)
         streaming._write_batch(out, batch_id, acc_dir)
 

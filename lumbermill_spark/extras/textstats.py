@@ -13,6 +13,8 @@ import pandas
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import _plan
+
 # BPE-ish tokenization: runs of alphanumerics OR single non-space symbols
 BPE_TOKEN_PAT = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
 PUNCT_PAT = r"[^\w\s]"
@@ -31,65 +33,6 @@ LANG_ORDER = ["en", "es", "de", "fr"]  # deterministic argmax tie-break
 
 def stopword_pat(lang: str) -> str:
     return r"\b(" + "|".join(STOPWORDS[lang]) + r")\b"
-
-
-# logical-plan nodes that imply the frame already crossed (or is) a shuffle /
-# materialization boundary and is therefore already spread across the cluster
-_BOUNDARY_NODES = {
-    "Aggregate",
-    "Join",
-    "Window",
-    "Repartition",
-    "RepartitionByExpression",
-    "RebalancePartitions",
-    "Sort",
-    "GlobalLimit",
-    "LogicalRDD",
-}
-
-
-def _post_shuffle(df: DataFrame) -> bool:
-    """True when the analyzed plan contains an aggregate/join/window/
-    repartition/checkpoint — the frame's partitioning was already decided by
-    an exchange (e.g. rendered conversations out of render_conversations'
-    groupBy), so widening it again would only add a useless shuffle. Walks
-    the private JVM plan, so it raises where there is none; _widen calls it
-    inside its try."""
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        if node.nodeName() in _BOUNDARY_NODES:
-            return True
-        ch = node.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
-    return False
-
-
-def _widen(df: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Spread a narrow corpus scan across the cluster before per-row-heavy
-    text work — the one widen rule of the extras (textstats, dedup, sketch,
-    similarity). The corpus tables here are small single-row-group parquet
-    files, and a row group is parquet's split unit — the scan yields 1-2
-    partitions no matter what spark.sql.files.maxPartitionBytes says, so
-    every regex/array projection was bottlenecked on 1-2 of local[32]'s
-    cores (measured: pmi 3.4 s → 0.8 s at sf0.1 from this alone). The
-    decision reads scan metadata (``inputFiles``) and the analyzed plan,
-    never an RDD getNumPartitions round-trip. A 100 TB input has more files
-    than cores and passes through untouched; a frame that already crossed a
-    shuffle boundary (conv render output, checkpoints) is returned
-    unchanged, so composed chains never pay a second exchange; so is a
-    frame whose files or plan cannot be read (no listable source, no JVM
-    plan)."""
-    if key not in df.columns:
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        if len(df.inputFiles()) >= target or _post_shuffle(df):
-            return df
-    except Exception:
-        return df
-    return df.repartition(target, key)
 
 
 def ws_token_count(text: Column) -> Column:
@@ -134,7 +77,7 @@ def fingerprint(text: Column) -> Column:
 
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    df = _widen(df)
+    df = _plan.widen(df)
     t = F.col(text_col)
     return df.withColumn("n_ws_tokens", ws_token_count(t)).withColumn(
         "n_bpe_tokens", bpe_token_count(t)
@@ -152,7 +95,7 @@ def _require_free(df: DataFrame, temps, op: str) -> None:
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality score ∈ [0,1]: alpha density, low punctuation, stopword
     presence, length — the standard cheap pre-filter for corpus curation."""
-    df = _widen(df)
+    df = _plan.widen(df)
     t = F.col(text_col)
     length = F.greatest(F.length(t), F.lit(1)).cast("double")
     ntok = F.greatest(ws_token_count(t), F.lit(1)).cast("double")
@@ -201,7 +144,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
 def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-hit language ID with fixed-precedence argmax ('und' if no
     hits anywhere)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     # STAGED evaluation (see with_quality): lower(text) once, each lang's
     # regexp_count once as a column; the argmax when-chain reads attributes.
     # The inlined form embedded every count ~16× inside pred_lang's CASE
@@ -340,7 +283,7 @@ def pack_shards(
     Output: (doc_id, n_tokens, offset_tokens, shard_id) — one row per doc;
     offset_tokens is the exclusive global prefix, kept so the oracle
     comparison pins the whole scan, not just the bucketing."""
-    df = _widen(df)
+    df = _plan.widen(df)
     d = df.select(
         "doc_id",
         bpe_token_count(F.col(text_col)).alias("n_tokens"),
@@ -436,7 +379,7 @@ def decontaminate(
 
     Output: one row per NON-benchmark document —
     (doc_id, n_hit_shingles, contaminated)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     is_bench = F.col("doc_id") % bench_mod == 0
     sh = df.select("doc_id", F.explode(_ws_shingles(F.col(text_col), w)).alias("s")).filter(
         F.col("s") != ""
@@ -570,7 +513,7 @@ def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     boundary back; every float op (1 - distinct/total, top/total, 6-dp
     round) stays in Catalyst, so the cross-engine float contract is
     untouched. Scale shape unchanged: still a pure per-row map, no shuffle."""
-    df = _widen(df)
+    df = _plan.widen(df)
     global _REP_COUNTS_UDF
     if _REP_COUNTS_UDF is None:
         _REP_COUNTS_UDF = _make_rep_counts_udf()
@@ -640,7 +583,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Count and redact PII spans: emails -> <EMAIL>, IPv4s -> <IP>, phones
     -> <PHONE> (replace order matters and is part of the contract: emails
     first so an address's host part can never be half-matched as an IP)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     t = F.col(text_col)
     n_emails = F.regexp_count(t, F.lit(EMAIL_RX)).cast("int")
     red = F.regexp_replace(t, EMAIL_RX, "<EMAIL>")
@@ -767,7 +710,7 @@ def remove_frequent_lines(
                        ('' when everything was boilerplate)
     Lines are keyed by md5 digest so the count shuffle moves 16 bytes per
     line instead of the line text."""
-    df = _widen(df)
+    df = _plan.widen(df)
     lines = df.select(
         "doc_id", F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line")
     ).withColumn("lk", F.md5(F.col("line")))
@@ -846,14 +789,13 @@ def unigram_logprob(
 
     Output per doc: n_tokens, n_oov, avg_logprob (natural log, 6 dp; NULL
     for empty docs). Empty documents survive with n_tokens = 0."""
-    df = _widen(df)
+    df = _plan.widen(df)
     toks = df.select("doc_id", F.explode_outer(ws_words(F.lower(F.col(text_col)))).alias("tok"))
 
     # The count table is vocab-sized (small); persist it so totals and the
     # top-K don't each re-tokenize the corpus, then pin the two tiny derived
-    # frames with an eager localCheckpoint and release the cache (the same
-    # hygiene as _materialize). Net corpus cost: exactly two tokenization
-    # passes — vocabulary build and scoring.
+    # frames and release the cache. Net corpus cost: exactly two
+    # tokenization passes — vocabulary build and scoring.
     counts = (
         toks.filter(F.col("tok").isNotNull())
         .groupBy("tok")
@@ -863,7 +805,7 @@ def unigram_logprob(
     totals = counts.agg(
         F.sum("c").alias("n_total"), F.count("*").alias("v_total")
     )
-    vocab = (
+    vocab = _plan.pin(
         _top_k(counts, vocab_k)
         .crossJoin(F.broadcast(totals))
         .select(
@@ -872,17 +814,15 @@ def unigram_logprob(
                 F.log((F.col("c") + 1) / (F.col("n_total") + F.col("v_total") + 1)), 12
             ).alias("logp"),
         )
-        .localCheckpoint(eager=True)
     )
-    oov_logp = (
+    oov_logp = _plan.pin(
         totals.select(
             F.round(F.log(1.0 / (F.col("n_total") + F.col("v_total") + 1)), 12).alias(
                 "oov_logp"
             )
-        )
-        .localCheckpoint(eager=True)
+        ),
+        counts,
     )
-    counts.unpersist()
     scored = (
         toks.join(F.broadcast(vocab), "tok", "left")
         .crossJoin(F.broadcast(oov_logp))
@@ -947,7 +887,7 @@ def corpus_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     Same exact-`percentile` contract as aggregate.router_rollup (the
     production path at 10^12 rows would swap in approx_percentile; the
     exact version is what a SQL oracle can replay value-for-value)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     t = F.col(text_col)
     return (
         df.withColumn("_nt", ws_token_count(t))
@@ -978,20 +918,6 @@ def corpus_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 SHUFFLE_SALT = "lmshuffle-v1"
 
 
-def _materialize(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Pin a (small) result via eager localCheckpoint, then release the
-    persisted intermediates backing it (shared by dedup, sketch and this
-    module). Without this, every call leaked its persisted frames for the
-    life of the session (round-3 advice): the checkpoint truncates lineage
-    so the result no longer references the caches, and its blocks are
-    GC-managed (ContextCleaner) rather than pinned in the cache manager
-    forever."""
-    out = result.localCheckpoint(eager=True)
-    for c in cached:
-        c.unpersist()
-    return out
-
-
 def pack_shards_shuffled(
     df: DataFrame,
     budget_tokens: int = DEFAULT_SHARD_BUDGET,
@@ -1011,7 +937,7 @@ def pack_shards_shuffled(
     conversation packs is a full render of every conversation — was
     recomputed three times (count, subtotal collect, final scan): measured
     3× the upstream cost at sf0.1 for zero benefit."""
-    df = _widen(df)
+    df = _plan.widen(df)
     h = F.expr(
         f"cast(conv(substr(md5(concat('{salt}', ':', cast(doc_id as string))),1,8),16,10) as bigint)"
     )
@@ -1035,7 +961,7 @@ def pack_shards_shuffled(
             F.floor(F.col("offset_tokens") / budget_tokens).cast("long").alias("shard_id"),
         )
     )
-    return _materialize(out, d0)
+    return _plan.pin(out, d0)
 
 
 # ---------------------------------------------------------------------------
@@ -1066,7 +992,7 @@ def pack_sequences(
     joined by `sep` in doc_id order. Token accounting matches pack_shards
     exactly (the separator is not counted; a production tokenizer counts its
     EOS as one token per doc — add n_docs if needed)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     d = df.select(
         "doc_id",
         F.col(text_col).alias("_txt"),
@@ -1116,7 +1042,7 @@ def take_per_stratum(
 ) -> DataFrame:
     """(doc_id, *strata, rn): the min(k, n) hash-smallest docs per stratum,
     rn = 1-based rank within the stratum by (hash, doc_id)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     h = F.expr(
         f"cast(conv(substr(md5(concat('{salt}', ':', cast({key_col} as string))),1,8),16,10) as bigint)"
     )
@@ -1177,7 +1103,7 @@ def chunk_sliding(
     tokens [i*stride, i*stride + chunk_len); the last chunk starts at the
     smallest multiple of stride reaching the tail (so every token is in
     ≥1 chunk and no chunk is a suffix-duplicate of the previous)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     if stride <= 0 or chunk_len < stride:
         raise ValueError(f"need 0 < stride <= chunk_len, got {stride}, {chunk_len}")
     d = df.select("doc_id", ws_words(F.col(text_col)).alias("_ts")).withColumn("_n", F.size("_ts"))
@@ -1248,13 +1174,13 @@ def _ngram_events(df: DataFrame, text_col: str, order: int) -> DataFrame:
 
 def _lm_vocab(ev: DataFrame, k: int) -> DataFrame:
     """The scorers' vocabulary (tok): the _top_k current tokens of an event
-    frame, pinned by an eager localCheckpoint — it is broadcast once per
+    frame, pinned — it is broadcast once per
     collapsed position and counted on the driver (K-bounded)."""
     counts = (
         ev.filter(F.col("cur_raw").isNotNull()).groupBy("cur_raw").agg(F.count("*").alias("c"))
     )
     top = _top_k(counts, k, "cur_raw").select(F.col("cur_raw").alias("tok"))
-    return top.localCheckpoint(eager=True)
+    return _plan.pin(top)
 
 
 def _unk_collapse(ev: DataFrame, vocab: DataFrame, bos: tuple[str, ...]) -> DataFrame:
@@ -1286,12 +1212,12 @@ def bigram_logprob(
     mean ln p(w_i | w_{i-1}) with add-one smoothing over V = K_effective + 1
     types (6 dp; per-bigram logp rounded to 12 dp before the mean so libm
     ulp skew can't break the value hash; NULL for empty docs)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     pairs = _ngram_events(df, text_col, 2)
     vocab = _lm_vocab(pairs, vocab_k)
     vm = vocab.count() + 1  # |vocab| + <unk>; driver-side K-bounded scalar
     m = _unk_collapse(pairs, vocab, bos=("p1",))
-    bc = m.groupBy("p1", "cur").agg(F.count("*").alias("cb")).localCheckpoint(eager=True)
+    bc = _plan.pin(m.groupBy("p1", "cur").agg(F.count("*").alias("cb")))
     cc = bc.groupBy("p1").agg(F.sum("cb").alias("ct"))  # derived free
     scored = (
         m.join(bc, ["p1", "cur"])  # total: the corpus scores itself
@@ -1388,7 +1314,7 @@ def vocab_topk(df: DataFrame, k: int = VOCAB_TOPK_K, text_col: str = "text") -> 
     """(rank, token, count, frac, cum_frac): the K most frequent lowercased
     whitespace tokens, each with its corpus share and the running coverage
     of the vocabulary so far (6 dp, ties broken token-ascending)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     words = ws_words(F.lower(F.col(text_col)))
     counts = (
         df.select(F.explode(words).alias("token"))
@@ -1398,10 +1324,9 @@ def vocab_topk(df: DataFrame, k: int = VOCAB_TOPK_K, text_col: str = "text") -> 
     )
     # pin the 1-row total BEFORE releasing the counts cache — total is only
     # consumed at the final action, which would otherwise re-tokenize the
-    # whole corpus after the unpersist below (unigram_logprob's hygiene)
-    total = counts.agg(F.sum("count").alias("_tot")).localCheckpoint(eager=True)
-    top = _top_k(counts, k, "token", "count").localCheckpoint(eager=True)
-    counts.unpersist()
+    # whole corpus once the top-K pin releases the cache
+    total = _plan.pin(counts.agg(F.sum("count").alias("_tot")))
+    top = _plan.pin(_top_k(counts, k, "token", "count"), counts)
     w = Window.orderBy(F.col("count").desc(), F.col("token")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1472,7 +1397,7 @@ def trigram_logprob(
     / n_uni), plus the mean ln-score (per-token ln rounded to 12 dp before
     the mean, 6 dp after — the ladder's libm-proofing convention; NULL for
     empty docs)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     cut = int(train_frac * (1 << 32))
     is_train = _tri_hash("doc_id", TRI_SALT) < cut
 
@@ -1483,17 +1408,16 @@ def trigram_logprob(
     # bigram scorers read it as a word when it is the current token)
     bos = ("p2", "p1", "cur")
 
-    # one pass builds the mapped train stream; pin it for the four actions
-    # (c3 / c2 / c1 counts + the N scalar), then release — the count tables
-    # are checkpointed so nothing re-reads the corpus after unpersist
+    # one pass builds the mapped train stream; persist it for the four
+    # actions (c3 / c2 / c1 counts + the N scalar); the last pin releases it,
+    # and the count tables are pinned so nothing re-reads the corpus after
     tm = _unk_collapse(train_ev, vocab, bos).persist()
-    c3 = tm.groupBy("p2", "p1", "cur").agg(F.count("*").alias("c3")).localCheckpoint(eager=True)
+    c3 = _plan.pin(tm.groupBy("p2", "p1", "cur").agg(F.count("*").alias("c3")))
     ctx3 = c3.groupBy("p2", "p1").agg(F.sum("c3").alias("t3"))  # derived free
-    c2 = tm.groupBy("p1", "cur").agg(F.count("*").alias("c2")).localCheckpoint(eager=True)
+    c2 = _plan.pin(tm.groupBy("p1", "cur").agg(F.count("*").alias("c2")))
     ctx2 = c2.groupBy("p1").agg(F.sum("c2").alias("t2"))
-    c1 = tm.groupBy("cur").agg(F.count("*").alias("c1")).localCheckpoint(eager=True)
     n_total = tm.count()  # driver-side scalar, one job on the cached tm
-    tm.unpersist()
+    c1 = _plan.pin(tm.groupBy("cur").agg(F.count("*").alias("c1")), tm)
 
     a = F.lit(TRI_ALPHA)
     score = (
@@ -1595,7 +1519,7 @@ def blocklist_filter(
     """Per doc: url, extracted host, blocked verdict, and the matched
     blocklist entry (min entry string when several match; NULL when clean).
     One row per input doc."""
-    df = _widen(df)
+    df = _plan.widen(df)
     exact = BLOCK_EXACT if exact is None else exact
     suffix = BLOCK_SUFFIX if suffix is None else suffix
     spark = df.sparkSession
@@ -1791,7 +1715,7 @@ def augment_gopher(df: DataFrame, text_col: str = "text") -> DataFrame:
 def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per doc: the seven Gopher signals, the verdict, and the fixed-order
     failed-rule reason string ('' when kept)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     t = F.col(text_col)
     d = df.select("doc_id", t.alias("_t"), ws_words(t).alias("_ws")).select(
         "doc_id",
@@ -1915,7 +1839,7 @@ def c4_clean(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per doc: line counts before/after the C4 line rules, the page-rule
     flags, the page verdict, and the cleaned text (kept lines, original
     order, newline-joined)."""
-    df = _widen(df)
+    df = _plan.widen(df)
 
     def _line_keep(l):
         lt = F.trim(l)
@@ -1972,7 +1896,7 @@ def corpus_datacard(
     Scale shape: exactly two exchanges at any corpus size (the fingerprint
     window, then the (lang, split) aggregate); the leakage test is
     min(split) ≠ max(split) over the fingerprint partition, O(1) state."""
-    df = _widen(df)
+    df = _plan.widen(df)
     w_train, w_val, w_test = weights
     if abs(w_train + w_val + w_test - 1.0) > 1e-9:
         raise ValueError(f"split weights must sum to 1, got {weights}")
@@ -2024,7 +1948,7 @@ def corpus_datacard(
 # aggregate (map-side combined, weighted by word count) plus word-partitioned
 # window passes that apply the merge with exact greedy left-to-right
 # non-overlap semantics. The only driver traffic is ONE row per round (the
-# winning pair). Each round's symbol table is eagerly localCheckpoint-ed so
+# winning pair). Each round's symbol table is pinned (_plan.pin) so
 # round r+1 reads a materialized table instead of re-deriving r rounds of
 # lineage.
 #
@@ -2044,7 +1968,7 @@ def bpe_merges(df: DataFrame, n_merges: int = BPE_MERGES, text_col: str = "text"
     """Learn the first n_merges BPE merges from the corpus: (round,
     left_sym, right_sym, pair_count, token). Ties break (count DESC, left
     ASC, right ASC) — deterministic on both engines (ASCII byte order)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     spark = df.sparkSession
     words = (
         df.select(
@@ -2054,9 +1978,8 @@ def bpe_merges(df: DataFrame, n_merges: int = BPE_MERGES, text_col: str = "text"
         .agg(F.count("*").cast("bigint").alias("wc"))
     )
     chars = "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-    syms = words.select(
-        "w", "wc", F.posexplode(F.expr(f"concat({chars}, array('{BPE_EOW}'))")).alias("pos", "sym")
-    ).localCheckpoint(eager=True)
+    eow = F.expr(f"concat({chars}, array('{BPE_EOW}'))")
+    syms = _plan.pin(words.select("w", "wc", F.posexplode(eow).alias("pos", "sym")))
 
     w_seq = Window.partitionBy("w").orderBy("pos")
     merges = []
@@ -2093,12 +2016,9 @@ def bpe_merges(df: DataFrame, n_merges: int = BPE_MERGES, text_col: str = "text"
             "pos",
             F.when(F.col("kept"), F.lit(L + R)).otherwise(F.col("sym")).alias("sym"),
         )
-        nxt_syms = ns.select(
-            "w", "wc", (F.row_number().over(w_seq) - 1).alias("pos"), "sym"
-        ).localCheckpoint(eager=True)
-        syms.unpersist()
-        syms = nxt_syms
-    syms.unpersist()
+        syms = _plan.pin(
+            ns.select("w", "wc", (F.row_number().over(w_seq) - 1).alias("pos"), "sym")
+        )
     return spark.createDataFrame(
         merges, "round int, left_sym string, right_sym string, pair_count bigint, token string"
     )
@@ -2126,7 +2046,7 @@ def memorization_scan(
 
     Output: one row per held-out doc — (doc_id, split, n_shingles, n_seen,
     seen_frac 6 dp)."""
-    df = _widen(df)
+    df = _plan.widen(df)
     w_train, w_val, w_test = weights
     if abs(w_train + w_val + w_test - 1.0) > 1e-9:
         raise ValueError(f"split weights must sum to 1, got {weights}")
@@ -2171,7 +2091,7 @@ def memorization_scan(
         )
         .select("doc_id", "split", "n_shingles", "n_seen", "seen_frac")
     )
-    return _materialize(out, sh)
+    return _plan.pin(out, sh)
 
 
 WSAMPLE_K = 25  # per-language keep budget for the weighted sample
@@ -2230,7 +2150,7 @@ def zipf_fit(df: DataFrame, k: int = ZIPF_TOPK, text_col: str = "text") -> DataF
     sequence; the closed forms are written with the same operation shape on
     both sides and rounded to 6 dp. Scale shape: one token-count aggregate
     (corpus-sized, map-side combined), then everything runs on k rows."""
-    df = _widen(df)
+    df = _plan.widen(df)
     words = ws_words(F.lower(F.col(text_col)))
     counts = (
         df.select(F.explode(words).alias("token"))
@@ -2308,7 +2228,7 @@ def tfidf_keywords(df: DataFrame, k: int = TFIDF_TOPK, text_col: str = "text") -
     key, a single-row N broadcast, and a doc_id-partitioned rank window —
     nothing global, nothing Python. The score multiplies tf by one ln()
     call, both single float64 ops, so 6-dp rounding is engine-stable."""
-    df = _widen(df)
+    df = _plan.widen(df)
     words = ws_words(F.lower(F.col(text_col)))
     tf = (
         df.select("doc_id", F.explode(words).alias("token"))
@@ -2355,7 +2275,7 @@ def pmi_collocations(df: DataFrame, k: int = PMI_TOPK, text_col: str = "text") -
     single-row totals broadcast, then TakeOrderedAndProject for the top-k —
     the rank window touches k rows only. The PMI is one ln() over a fixed
     ratio shape, so 6-dp rounding is engine-stable."""
-    df = _widen(df)
+    df = _plan.widen(df)
     words = ws_words(F.lower(F.col(text_col)))
     toks = df.select(F.explode(words).alias("tok"))
     # persisted: the unigram table feeds BOTH marginal joins and the token
@@ -2403,7 +2323,7 @@ def pmi_collocations(df: DataFrame, k: int = PMI_TOPK, text_col: str = "text") -
     out = top.withColumn(
         "rank", F.row_number().over(Window.orderBy(F.col("pmi").desc(), "x", "y")).cast("int")
     )
-    return _materialize(out, pairs_all, uni)
+    return _plan.pin(out, pairs_all, uni)
 
 
 KN_DISCOUNT = 0.75  # the standard Kneser-Ney absolute discount
@@ -2425,10 +2345,10 @@ def kn_logprob(
     12-dp per-bigram rounding before the mean). All counts are integers
     from one <unk>-collapsed bigram table; the float shape is fixed and
     mirrored in the oracle. B and |vocab| are K-bounded driver scalars."""
-    df = _widen(df)
+    df = _plan.widen(df)
     pairs = _ngram_events(df, text_col, 2)
     m = _unk_collapse(pairs, _lm_vocab(pairs, vocab_k), bos=("p1",))
-    bc = m.groupBy("p1", "cur").agg(F.count("*").alias("cb")).localCheckpoint(eager=True)
+    bc = _plan.pin(m.groupBy("p1", "cur").agg(F.count("*").alias("cb")))
     cc = bc.groupBy("p1").agg(
         F.sum("cb").cast("long").alias("ct"), F.count("*").cast("long").alias("n1f")
     )

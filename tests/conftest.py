@@ -16,6 +16,20 @@ def spark():
     sp.stop()
 
 
+@pytest.fixture
+def lazy_pins(spark, monkeypatch):
+    """Swap the extras' one materialization rule (_plan.pin) for the
+    identity, so operators return their lazy plans: an eager checkpoint
+    collapses a plan to a LogicalRDD, which would make plan-shape asserts
+    vacuous. The caches a pin would have released are cleared on teardown,
+    so later tests' empty-cache checks still run."""
+    from lumbermill_spark.extras import _plan
+
+    monkeypatch.setattr(_plan, "pin", lambda df, *release: df)
+    yield
+    spark.catalog.clearCache()
+
+
 def make_transcripts_df(spark, rows):
     """rows: list of (conv_id, turn_idx, role, text, tool, ts_us)."""
     import pyarrow as pa

@@ -7,6 +7,10 @@ This is the third leg of the dedup correctness tripod:
   3. THIS file recomputes signatures from the written definition —
      per shingle/token s: a = int(md5(s)[:15 hex]), b = int(md5(s)[16:30 / 16:20 hex]);
      minhash sig[j] = min_s(a + j*b); simhash bit j from a (j<60) or b (j>=60).
+
+Each signature has two Spark legs: the product's Arrow kernel and a native
+Catalyst SQL fold defined here (MINHASH_SIG_EXPR, _SIMHASH_BANDS_EXPR) — the
+golden twins that the kernels replaced.
 """
 
 from __future__ import annotations
@@ -16,6 +20,70 @@ import hashlib
 from pyspark.sql import functions as F
 
 from lumbermill_spark.extras import dedup
+from lumbermill_spark.extras.dedup import (
+    _TOKENS_EXPR,
+    MINHASH_P,
+    MINHASH_PERMS,
+    PERM_A,
+    PERM_B,
+    SIMHASH_BANDS,
+    SIMHASH_BITS,
+)
+
+# EVALUATION-ORDER WARNING: Spark evaluates a higher-order function's
+# *arguments* once, but re-evaluates its *lambda body* on every iteration —
+# there is no loop-invariant hoisting. The md5 transform must therefore sit
+# in argument position (input of the fold below), never inside the per-perm
+# lambda; a naive `transform(seq(0,63), j -> ...md5...)` form recomputes
+# every md5 64× and is ~60× slower. (The literal A/B arrays below constant-
+# fold, so element_at on them inside the lambda is cheap.)
+_SHINGLE_X = (
+    "transform(transform(shingles, s -> md5(s)), "
+    f"m -> cast(conv(substr(m,1,8),16,10) as bigint) % {MINHASH_P})"
+)
+
+_A_LIT = "array(" + ",".join(f"{v}L" for v in PERM_A) + ")"
+_B_LIT = "array(" + ",".join(f"{v}L" for v in PERM_B) + ")"
+
+# sig[j] = min over shingles of h_j(x): one fold over the shingle hashes,
+# zip_with keeps the 64 running minima.
+MINHASH_SIG_EXPR = (
+    f"aggregate({_SHINGLE_X}, "
+    f"array_repeat(cast({MINHASH_P} as bigint), {MINHASH_PERMS}), "
+    f"(acc, x) -> zip_with(acc, sequence(0,{MINHASH_PERMS - 1}), "
+    f"(mn, j) -> least(mn, (element_at({_A_LIT}, j+1) * x + element_at({_B_LIT}, j+1)) % {MINHASH_P})))"
+)
+
+_TOKEN_HASHES = (
+    f"transform(transform({_TOKENS_EXPR}, t -> md5(t)), m -> named_struct("
+    "'a', cast(conv(substr(m,1,15),16,10) as bigint), "
+    "'b', cast(conv(substr(m,16,4),16,10) as bigint)))"
+)
+
+# One fold over the token hashes → 64 bit-sums (md5 once per token; see the
+# evaluation-order warning above — the hashes are the fold's argument).
+_SIMHASH_ACC = (
+    f"aggregate({_TOKEN_HASHES}, "
+    f"array_repeat(cast(0 as bigint), {SIMHASH_BITS}), "
+    f"(acc, h) -> zip_with(acc, sequence(0,{SIMHASH_BITS - 1}), "
+    "(x, j) -> x + 2 * (CASE WHEN j < 60 THEN shiftright(h.a, j) & 1 "
+    "ELSE shiftright(h.b, j-60) & 1 END) - 1))"
+)
+
+# Second fold packs the 64 sign bits into 4 × 16-bit band ints. The expensive
+# _SIMHASH_ACC is this fold's *argument* (evaluated once); a naive
+# `transform(seq(0,3), b -> ...ACC...)` would recompute the whole token fold
+# per band.
+_SIMHASH_BANDS_EXPR = (
+    f"aggregate({_SIMHASH_ACC}, "
+    f"named_struct('i', 0, 'b', array_repeat(cast(0 as bigint), {SIMHASH_BANDS})), "
+    f"(st, v) -> named_struct('i', st.i + 1, "
+    f"'b', transform(sequence(0,{SIMHASH_BANDS - 1}), k -> "
+    "CASE WHEN st.i div 16 = k THEN element_at(st.b, k+1) "
+    "+ shiftleft(CASE WHEN v > 0 THEN cast(1 as bigint) ELSE cast(0 as bigint) END, st.i % 16) "
+    "ELSE element_at(st.b, k+1) END)), "
+    "st -> st.b)"
+)
 
 TEXTS = [
     "the quick brown fox jumps over the lazy dog",
@@ -77,7 +145,7 @@ def _native_minhash(df):
     sentinel)."""
     present = F.col("text").isNotNull()
     return df.withColumn("shingles", F.when(present, F.expr(dedup.SHINGLES_EXPR))).withColumn(
-        "sig", F.when(present, F.expr(dedup.MINHASH_SIG_EXPR))
+        "sig", F.when(present, F.expr(MINHASH_SIG_EXPR))
     )
 
 
@@ -96,11 +164,12 @@ def test_minhash_signatures_match_pure_python(spark):
 
 
 def test_simhash_bands_match_pure_python(spark):
-    for impl in ("arrow", "native"):
-        got = {
-            r["doc_id"]: r["bands"] and list(r["bands"])
-            for r in dedup.simhash_signatures(_df(spark), impl=impl).collect()
-        }
+    legs = {
+        "arrow": dedup.simhash_signatures(_df(spark)),
+        "native": _df(spark).select("doc_id", F.expr(_SIMHASH_BANDS_EXPR).alias("bands")),
+    }
+    for impl, sigs in legs.items():
+        got = {r["doc_id"]: r["bands"] and list(r["bands"]) for r in sigs.collect()}
         for i, t in enumerate(TEXTS):
             assert got[i] == py_simhash_bands(t), f"[{impl}] simhash bands mismatch for {t!r}"
             assert all(0 <= b < (1 << 16) for b in got[i] or [])

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
-from lumbermill_spark.extras import dedup, multimodal, similarity, textstats
+from lumbermill_spark.extras import _plan, dedup, multimodal, similarity, textstats
 from tools.selfcheck import normalize
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -205,8 +205,8 @@ def test_widen_rule(spark, tmp_path, monkeypatch, case):
         def _raise(_):
             raise AttributeError("no JVM plan")
 
-        monkeypatch.setattr(textstats, "_post_shuffle", _raise)
-    out = textstats._widen(df)
+        monkeypatch.setattr(_plan, "post_shuffle", _raise)
+    out = _plan.widen(df)
     if case == "one_file_scan":
         assert out.sameSemantics(df.repartition(target, "doc_id"))
     else:
@@ -321,6 +321,23 @@ def test_no_rdd_api_in_package():
 
     pkg = pathlib.Path(lumbermill_spark.__file__).parent
     offenders = [str(p) for p in pkg.rglob("*.py") if ".rdd" in p.read_text()]
+    assert offenders == []
+
+
+def test_no_local_checkpoint_outside_plan():
+    """Every eager materialization in the package goes through the one rule,
+    extras/_plan.pin: no `localCheckpoint` (comments included) anywhere
+    else."""
+    import pathlib
+
+    import lumbermill_spark
+
+    pkg = pathlib.Path(lumbermill_spark.__file__).parent
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "localCheckpoint" in p.read_text() and p != pkg / "extras" / "_plan.py"
+    ]
     assert offenders == []
 
 
@@ -1058,6 +1075,34 @@ def test_vocab_topk_golden(spark):
         (2, "b", 2, round(2 / 7, 6), round(5 / 7, 6)),
         (3, "c", 2, round(2 / 7, 6), 1.0),
     ]
+
+
+def test_vocab_topk_tie_straddles_k(spark):
+    """A count tie that straddles K: three tokens share count 2 and one
+    slot is left, so the token-ascending tie-break alone decides which word
+    enters the vocabulary (the shared _top_k rule behind every top-K
+    vocabulary)."""
+    df = spark.createDataFrame([(0, "z z z c b a c b a")], "doc_id long, text string")
+    out = [(r["rank"], r["token"], r["count"]) for r in textstats.vocab_topk(df, k=2).collect()]
+    assert sorted(out) == [(1, "z", 3), (2, "a", 2)]
+
+
+def test_centroid_collect_is_bounded(spark, monkeypatch):
+    """The centroid table is inlined into the plan as literals, so its
+    collect is capped: a table over MAX_INLINE_CENTROIDS rows raises with
+    the bound instead of being pulled to the driver whole; one at the bound
+    still assigns cells."""
+    monkeypatch.setattr(similarity, "MAX_INLINE_CENTROIDS", 2)
+    e = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, v array<double>"
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-1.0, 0.0])], "cid int, cv array<double>"
+    )
+    with pytest.raises(ValueError, match="more than 2 rows"):
+        similarity._assign_cells(e, cents, 1, "vec_id")
+    got = similarity._assign_cells(e, cents.filter("cid < 2"), 1, "vec_id").collect()
+    assert sorted((r["vec_id"], r["cid"]) for r in got) == [(0, 0), (1, 1)]
 
 
 def test_pack_conversations_matches_shuffled_pack(spark):

@@ -83,17 +83,16 @@ def test_top_tokens_sorts_only_aggregated_counts(spark):
     assert plan.index("Window") < plan.index("partial_count")
 
 
-def test_dedup_blocking_never_cross_joins(spark):
+def test_dedup_blocking_never_cross_joins(spark, lazy_pins):
     """Candidate generation in every dedup operator must be an equality join
     on a blocking key — no cartesian/nested-loop stage at any scale."""
     from lumbermill_spark.extras import dedup
 
     docs = dedup.augmented_docs(spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
     for op in (dedup.minhash_lsh_pairs, dedup.simhash_pairs, dedup.ngram_jaccard_pairs):
-        # materialize=False: inspect the LAZY candidate-generation plan —
-        # the default eager localCheckpoint collapses it to a LogicalRDD,
-        # which would make this assertion vacuous
-        plan = _plan(op(docs, materialize=False))
+        # lazy_pins: inspect the LAZY candidate-generation plan — the eager
+        # pins collapse it to a LogicalRDD, which would make this vacuous
+        plan = _plan(op(docs))
         assert "CartesianProduct" not in plan, op.__name__
         assert "BroadcastNestedLoopJoin" not in plan, op.__name__
         spark.catalog.clearCache()
@@ -141,7 +140,7 @@ def test_canonical_selection_windows_on_cluster(spark):
 def test_repetition_and_redaction_are_pure_projections(spark):
     """The repetition signals and PII redaction are per-row projections: the
     ONLY exchange allowed is the conditional input-widening repartition on
-    doc_id (textstats._widen — fires only on few-file scans, a no-op at real
+    doc_id (_plan.widen — fires only on few-file scans, a no-op at real
     file counts); any other shuffle here would be a scale bug. No Python
     evaluation (all higher-order/regexp expressions stay JVM-side)."""
     from lumbermill_spark.extras import textstats
@@ -214,7 +213,7 @@ def test_unigram_logprob_broadcasts_vocab(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     plan = _plan(textstats.unigram_logprob(docs, vocab_k=16))
     assert "BroadcastHashJoin" in plan
-    # the vocab/oov frames were materialized by the eager localCheckpoint
+    # the vocab/oov frames were materialized by their eager pins (_plan.pin)
     # (their top-K ran as a distributed TakeOrdered in that job; tie-break
     # determinism is golden-tested) so the scoring plan probes pre-built
     # ExistingRDDs — ONE corpus scan, no sort, no window, no cartesian
@@ -337,13 +336,13 @@ def test_blocklist_join_is_broadcast(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_duplicate_spans_windows_stay_doc_partitioned(spark):
+def test_duplicate_spans_windows_stay_doc_partitioned(spark, lazy_pins):
     """The interval-union windows must partition on doc_id (never global),
     and candidate marking must be an equality join on the shingle digest."""
     from lumbermill_spark.extras import dedup, textstats
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = _plan(dedup.duplicate_spans(textstats.augment_lines(docs), materialize=False))
+    plan = _plan(dedup.duplicate_spans(textstats.augment_lines(docs)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Exchange SinglePartition" not in plan
@@ -456,7 +455,7 @@ def test_conv_tool_flow_windows_stay_partitioned(spark):
     assert "hashpartitioning(prev_tool" in plan
 
 
-def test_conv_near_dup_blocking_never_cross_joins(spark):
+def test_conv_near_dup_blocking_never_cross_joins(spark, lazy_pins):
     """Conversation near-dup inherits the minhash candidate contract: the
     band join is an equality join — no cartesian/nested-loop stage."""
     from lumbermill_spark.extras import convcorpus, dedup
@@ -466,7 +465,7 @@ def test_conv_near_dup_blocking_never_cross_joins(spark):
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
     aug = convcorpus.augmented_conversations(df)
-    plan = _plan(dedup.minhash_lsh_pairs(aug, materialize=False))
+    plan = _plan(dedup.minhash_lsh_pairs(aug))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     spark.catalog.clearCache()
@@ -519,7 +518,7 @@ def test_render_sessions_single_exchange(spark):
     assert "Python" not in plan and "Join" not in plan
 
 
-def test_sketch_ops_broadcast_and_bounded(spark):
+def test_sketch_ops_broadcast_and_bounded(spark, lazy_pins):
     """The sketch suite's scale contracts: CMS probes and the bloom bit
     table BROADCAST (never sort-merge or cartesian); the HLL register fold
     has no corpus-sized single partition (the one global agg folds 256
@@ -529,9 +528,9 @@ def test_sketch_ops_broadcast_and_bounded(spark):
     from lumbermill_spark.extras import sketch, textstats
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # materialize=False: inspect the LAZY plan (the default eager
-    # localCheckpoint collapses it to a LogicalRDD)
-    p_cms = _plan(sketch.cms_topk(docs, materialize=False))
+    # lazy_pins: inspect the LAZY plan (the eager pin collapses it to a
+    # LogicalRDD)
+    p_cms = _plan(sketch.cms_topk(docs))
     assert "BroadcastHashJoin" in p_cms
     assert "SortMergeJoin" not in p_cms and "CartesianProduct" not in p_cms
 
