@@ -600,12 +600,17 @@ def dup_clusters_conversations(df: DataFrame, max_iter: int = 20) -> DataFrame:
     dedup.connected_components with STRING conv_id labels (the
     lexicographic min reachable id is the cluster id; every augmented
     conversation gets a row, singletons are their own cluster). Near-dup
-    components have tiny diameter, so convergence is 2-3 rounds."""
+    components have tiny diameter, so convergence is 2-3 rounds. One persisted
+    render feeds both the pairs and the nodes."""
     from . import dedup
 
-    pairs = near_dup_conversations(df).select("doc_a", "doc_b")
-    nodes = augmented_conversations(df).select("doc_id").distinct()
-    return dedup.connected_components(nodes, pairs, max_iter=max_iter)
+    aug = augmented_conversations(df).persist()
+    try:
+        pairs = dedup.minhash_lsh_pairs(aug).select("doc_a", "doc_b")
+        nodes = aug.select("doc_id").distinct()
+        return dedup.connected_components(nodes, pairs, max_iter=max_iter)
+    finally:
+        aug.unpersist()
 
 
 def vocab_conversations(df: DataFrame) -> DataFrame:

@@ -1,4 +1,4 @@
-"""End-to-end batch driver: scan → classify → parse → enrich → route → fan-out
+"""End-to-end batch driver: scan → classify → enrich → parse → route → fan-out
 → aggregate, with per-chunk lineage commit and resume.
 
 Shape of the plan (and why it scales):
@@ -6,6 +6,8 @@ Shape of the plan (and why it scales):
   * classification + sentinel prefilters are native expressions evaluated
     BEFORE the parse UDF (drain.go's hand-rolled short-circuit, kept visible
     to Catalyst so column pruning / predicate pushdown reach the parquet scan);
+  * enrich's dim keys are checked unique (enrich.load_dims) and no sink or
+    counter reads a dim column, so Catalyst drops both enrich joins;
   * chunks come from the file index the input read already built (sorted,
     paged out of the JVM), never from a scan of the rows; each chunk is read
     with the input's schema, so the only schema-inference job is the first
@@ -55,24 +57,12 @@ class PipelineConfig:
     sink_format: str = "parquet"  # 'parquet' | 'noop' | 'iceberg' (sinks.py)
     n_buckets: int = 16
     n_salts: int = 8
-    enrich: bool = True
     write_metrics: bool = True
     # max source files per chunk. None → DEFAULT_CHUNK_FILES: an unchunked
     # 10^6-file input would otherwise build a create_map with 2M literals
     # (the per-chunk file-id dictionary) and a driver-sized file list —
     # the cap bounds both (round-3 verdict, wrong #3 / next #6)
     chunk_files: int | None = None
-    # which catalog-table (fs_managed=False) orphan chunks resume may DELETE:
-    #   'owned' (default) — only chunk ids whose run_id this out_dir's ledger
-    #     owns (begin/done markers), so a concurrent deployment sharing the
-    #     catalog namespace keeps its rows. Migration caveat: a run from
-    #     BEFORE run registration existed that crashed on its very first
-    #     chunk left no marker at all and is indistinguishable from a
-    #     foreign deployment — its rows are NOT cleaned under 'owned';
-    #   'all' — the pre-scoping behavior (delete every marker-less chunk in
-    #     the table): use once to migrate such a deployment, ONLY when no
-    #     other deployment shares the namespace.
-    orphan_scope: str = "owned"
 
 
 # create_map carries 2 literals per file; 1024 files/chunk keeps the
@@ -243,10 +233,6 @@ def run(
     resume: bool = False,
 ) -> PipelineResult:
     cfg = cfg or PipelineConfig()
-    if cfg.orphan_scope not in ("owned", "all"):
-        # fail loudly: a typo'd scope would silently behave as 'owned' and the
-        # intended one-time 'all' migration cleanup would never happen
-        raise ValueError(f"orphan_scope must be 'owned' or 'all', got {cfg.orphan_scope!r}")
     t0 = time.time()
     run_id = uuid.uuid4().hex[:12]
     noop = cfg.sink_format == "noop"
@@ -269,22 +255,20 @@ def run(
         # FS plane (ledger + parquet sinks/metrics): prefix globs + deletes.
         orphans = lin.cleanup_orphans(spark, out_dir)
         if not sink_writer.fs_managed:
-            # catalog-table sinks (Iceberg): rows committed by a crashed
-            # chunk are invisible to FS globs — remove them with the sink's
-            # own transactional DELETE, per table, for every chunk_id that
-            # has data but no .done marker. Scoped to chunk ids whose run_id
-            # is OWNED by this out_dir's ledger (begin/done markers): the
-            # table identity (catalog.namespace.<sink>) is independent of
-            # out_dir, so an unscoped delete would destroy rows committed by
-            # a concurrent or parallel deployment sharing the namespace
-            # (round-3/4 advice, medium).
+            # catalog-table sinks (Iceberg): a crashed chunk's rows are
+            # invisible to FS globs — remove them with the sink's own
+            # transactional DELETE, per table, for every chunk_id that has
+            # data, no .done marker and a run_id this out_dir's ledger OWNS
+            # (begin/done markers): the table identity (catalog.namespace.
+            # <sink>) is independent of out_dir, and a deployment sharing the
+            # namespace keeps its rows.
             done = lin.done_chunk_ids(spark, out_dir)
             owned = lin.owned_run_ids(spark, out_dir)
             for tbl_path in [_sink_dir(out_dir, s) for s in S.ALL_SINKS] + [
                 os.path.join(out_dir, "metrics", m) for m in METRIC_TABLES
             ]:
                 for cid in sorted(sink_writer.list_chunk_ids(spark, tbl_path) - done):
-                    if cfg.orphan_scope != "all" and cid.rsplit("_", 1)[0] not in owned:
+                    if cid.rsplit("_", 1)[0] not in owned:
                         continue  # another deployment's chunk — not ours to undo
                     sink_writer.delete_chunk(spark, tbl_path, cid)
                     orphans.append(f"{tbl_path}#chunk_id={cid}")
@@ -298,7 +282,7 @@ def run(
             done_files = done_df.orderBy(F.encode("source_file", "UTF-16BE")).toLocalIterator()
             files = _without(files, (r["source_file"] for r in done_files))
 
-    dims = enrich_mod.load_dims(spark) if cfg.enrich else None
+    dims = enrich_mod.load_dims(spark)
     totals: dict[str, int] = {k: 0 for k in S.ALL_SINKS}
     cls_totals: dict[str, int] = {}
     rows_in = 0
@@ -332,10 +316,7 @@ def run(
             df = spark.read.schema(src.schema).parquet(*[unquote(f) for f in chunk]).withColumn(
                 "file_id", fid_map[F.col("_metadata.file_path")].cast("int")
             )
-            classified = C.classify(df)
-            if cfg.enrich:
-                classified = enrich_mod.enrich(classified, dims)
-            parsed = P.with_parsed(classified, parser=cfg.parser)
+            parsed = P.with_parsed(enrich_mod.enrich(C.classify(df), dims), parser=cfg.parser)
             # prune to exactly what the sinks/metrics/lineage consume before the
             # persist — at 10^12 rows the cache/shuffle footprint is the limiting
             # factor. After the parse, the raw text is only consumed by the
@@ -353,8 +334,7 @@ def run(
             # turn_idx is consumed by nothing downstream of the parse except the
             # salt lane — fold it into a 4-byte salt column and drop the rest
             parsed = parsed.withColumn("salt", route.salt_expr(F.col("turn_idx"), cfg.n_salts))
-            keep = ["token", "time", "tool", "text", "msg_class", "p", "file_id", "salt"]
-            parsed = parsed.select(*[c for c in keep if c in parsed.columns])
+            parsed = parsed.select("token", "time", "tool", "text", "msg_class", "p", "file_id", "salt")
             # encode msg_class (avg ~11-char string) as a tinyint below the
             # exchange and decode with a when-chain above it — Catalyst's
             # column pruning keeps the decode on the reduce side, so the

@@ -2,7 +2,7 @@
 
   spark-submit --master <cluster> --py-files lumbermill_spark.zip \
       scripts/run_pipeline.py --input <transcripts_dir> --out <out_dir> \
-      [--parser pandas|native] [--sink parquet|noop] [--chunk-files N] \
+      [--parser pandas|native|native_fast] [--sink parquet|noop] [--chunk-files N] \
       [--resume] [--buckets 16] [--salts 8]
 
 Prints a one-line JSON run report (rows in, per-sink rows, class counts,
@@ -24,13 +24,12 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--parser", default="pandas", choices=["pandas", "native"])
+    ap.add_argument("--parser", default="pandas")
     ap.add_argument("--sink", default="parquet", choices=["parquet", "noop"])
     ap.add_argument("--chunk-files", type=int, default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--buckets", type=int, default=16)
     ap.add_argument("--salts", type=int, default=8)
-    ap.add_argument("--no-enrich", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -45,7 +44,6 @@ def main() -> None:
         n_buckets=args.buckets,
         n_salts=args.salts,
         chunk_files=args.chunk_files,
-        enrich=not args.no_enrich,
     )
     res = pipeline.run(spark, args.input, args.out, cfg, resume=args.resume)
     print(

@@ -1999,6 +1999,24 @@ def test_kn_logprob_golden(spark):
         assert got[i]["avg_logprob"] == round(sum(lps) / len(lps), 6), i
 
 
+def test_conv_dup_clusters_renders_once(spark, monkeypatch):
+    """One render per call: the persisted render feeds both the pair search
+    and the node list, and is released when the labels come back."""
+    from lumbermill_spark import datagen
+    from lumbermill_spark.extras import convcorpus
+
+    calls = []
+    render = convcorpus.render_conversations
+    monkeypatch.setattr(convcorpus, "render_conversations", lambda df: calls.append(1) or render(df))
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    pre_empty = cm.isEmpty()
+    df = spark.read.parquet(datagen.ensure_transcripts(0.001))
+    assert convcorpus.dup_clusters_conversations(df).count() > 0
+    assert len(calls) == 1
+    if pre_empty:
+        assert cm.isEmpty()
+
+
 def test_conv_dup_clusters_golden(spark):
     """A chain a~b, b~c must collapse to ONE cluster labeled by the
     lexicographic min id (multi-hop propagation, not just pair grouping)."""

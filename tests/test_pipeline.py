@@ -194,9 +194,10 @@ def test_index_listing_matches_file_path_column(spark, small_input, tmp_path):
     assert res.chunks == 1 and res.rows_in == 4000
 
 
-def test_noop_run_submits_at_most_six_jobs(spark, small_input, tmp_path):
+def test_noop_run_submits_at_most_four_jobs(spark, small_input, tmp_path):
     """A fresh single-chunk noop run: the input read's schema inference plus
-    the summary job's stages, and nothing that only lists or plans."""
+    the summary job's stages, and nothing that only lists, plans or
+    broadcasts an enrich dim no sink reads."""
     sc = spark.sparkContext
     sc.setJobGroup("noop_job_count", "noop pipeline.run")
     try:
@@ -206,7 +207,31 @@ def test_noop_run_submits_at_most_six_jobs(spark, small_input, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert res.chunks == 1 and res.rows_in == 4000
-    assert len(sc.statusTracker().getJobIdsForGroup("noop_job_count")) <= 6
+    assert len(sc.statusTracker().getJobIdsForGroup("noop_job_count")) <= 4
+
+
+@pytest.mark.parametrize("bad", ["repeated_key", "oversized"])
+def test_load_dims_rejects_bad_dim(spark, tmp_path, monkeypatch, bad):
+    """A repeated dim key would multiply fact rows through the enrich join,
+    and an oversized dim would be broadcast to every task: load_dims raises
+    on both, naming the dim."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lumbermill_spark import datagen, enrich
+
+    monkeypatch.setenv("LUMBERMILL_DATA_DIR", str(tmp_path))
+    if bad == "repeated_key":
+        tools = datagen.dim_tools_table()
+        pq.write_table(pa.concat_tables([tools, tools.slice(0, 1)]), datagen.dims_path("tools"))
+        match = "'tools' repeats a value of its key 'tool'"
+    else:
+        n = enrich.DIM_MAX_ROWS + 1
+        roles = pa.table({"role": ["r%d" % i for i in range(n)], "role_class": ["agent"] * n})
+        pq.write_table(roles, datagen.dims_path("roles"))
+        match = "'roles' has %d rows" % n
+    with pytest.raises(ValueError, match=match):
+        enrich.load_dims(spark)
 
 
 def test_zero_row_file_is_no_chunk(spark, small_input, tmp_path):

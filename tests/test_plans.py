@@ -17,11 +17,14 @@ def _analyzed(df) -> str:
 
 
 def test_enrich_uses_broadcast_join(spark):
+    """Reading tool_kind keeps exactly the tools join, broadcast; the unread
+    roles join leaves the plan."""
     df = spark.read.parquet(datagen.ensure_transcripts(0.001))
     out = enrich.enrich(classify.classify(df), enrich.load_dims(spark))
     plan = _plan(out.groupBy("tool_kind").count())
-    assert "BroadcastHashJoin" in plan
+    assert plan.count("BroadcastHashJoin") == 1
     assert "SortMergeJoin" not in plan
+    assert "dim_roles" not in plan
 
 
 def test_single_arrow_exchange_per_sink(spark):
@@ -49,13 +52,14 @@ def test_similarity_broadcasts_queries(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_column_pruning_reaches_dim_scan(spark):
-    """The enrich dims must be pruned to the join key when downstream only
-    needs the key (Catalyst column pruning through the broadcast join)."""
+def test_drain_plan_has_no_enrich_join(spark):
+    """No sink reads a dim column, and load_dims hands Catalyst keys it can
+    prove unique, so both enrich joins and both dim scans leave the plan."""
     df = spark.read.parquet(datagen.ensure_transcripts(0.001))
     out = enrich.enrich(classify.classify(df), enrich.load_dims(spark))
     plan = _plan(parse.sink_router(parse.with_parsed(out, "pandas")))
-    assert "ReadSchema: struct<tool:string>" in plan
+    assert "Join" not in plan
+    assert "dim_tools" not in plan and "dim_roles" not in plan
 
 
 def test_sessionize_single_exchange(spark):

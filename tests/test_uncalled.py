@@ -1,8 +1,9 @@
 """Guard against code that nothing calls: every top-level ``def``/``class`` in
 ``lumbermill_spark/`` must be named somewhere besides its own definition —
 in the package, the tests, the scripts, the benchmarks or the driver entry
-point. A plain AST + word-boundary scan: no Spark session, well under a
-second."""
+point — and every ``PipelineConfig`` field must be set by some caller
+outside ``pipeline.py`` and the tests. A plain AST + word-boundary scan: no
+Spark session, well under a second."""
 
 import ast
 import os
@@ -42,3 +43,19 @@ def test_every_top_level_name_is_referenced():
         if words[name] <= len(where)  # each definition names itself once
     ]
     assert not uncalled, "defined but referenced nowhere else: " + "; ".join(uncalled)
+
+
+def test_every_pipeline_config_field_is_set():
+    """A knob that nothing outside its own module and the tests sets is a
+    branch no run takes: each field must appear as ``<field>=`` elsewhere."""
+    texts = _texts()
+    config = os.path.join(ROOT, PACKAGE, "pipeline.py")
+    tests = os.path.join(ROOT, "tests") + os.sep
+    (cls,) = [
+        n for n in ast.parse(texts[config]).body if isinstance(n, ast.ClassDef) and n.name == "PipelineConfig"
+    ]
+    fields = [n.target.id for n in cls.body if isinstance(n, ast.AnnAssign)]
+    assert fields
+    callers = [t for p, t in texts.items() if p != config and not p.startswith(tests)]
+    unset = [f for f in fields if not any(re.search(r"\b%s=(?!=)" % f, t) for t in callers)]
+    assert not unset, "PipelineConfig fields no caller sets: " + ", ".join(unset)
